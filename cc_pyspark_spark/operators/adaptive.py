@@ -112,22 +112,30 @@ def loop_shuffle(
     1.16x WORSE with AQE off. AQE never changes results, only physical
     planning; the caller's session values are restored on exit either
     way. ``SPARK_GRAFT_LOOP_AQE`` overrides the parameter globally
-    (the A/B probe knob; scripts/r16_ab_probe.py).
+    (the A/B probe knob; scripts/r16_ab_probe.py); both are
+    case-insensitive, and any value other than on/off raises
+    ValueError before the session conf is touched.
 
     Concurrency note (ADVICE r15): this mutates session-global conf
     keys, assuming single-threaded query planning per session — the
     bench/driver/runner contract today. A future threaded driver must
     plan concurrent queries on separate sessions (``newSession()``) or
     serialise planning around these scopes."""
+    mode = os.environ.get("SPARK_GRAFT_LOOP_AQE", aqe).strip().lower()
+    if mode not in ("on", "off"):
+        raise ValueError(
+            f"loop AQE mode must be 'on' or 'off', got {mode!r} "
+            "(aqe= or SPARK_GRAFT_LOOP_AQE)"
+        )
     key = "spark.sql.shuffle.partitions"
     aqe_key = "spark.sql.adaptive.enabled"
     old = spark.conf.get(key)
     old_aqe = spark.conf.get(aqe_key)
     n = loop_partitions(spark, n_rows, n_cols)
-    spark.conf.set(key, str(n))
-    if os.environ.get("SPARK_GRAFT_LOOP_AQE", aqe) != "on":
-        spark.conf.set(aqe_key, "false")
     try:
+        spark.conf.set(key, str(n))
+        if mode == "off":
+            spark.conf.set(aqe_key, "false")
         yield n
     finally:
         spark.conf.set(key, old)

@@ -15,6 +15,14 @@ for DataFrames:
    differently, and the `__pid` join silently drops/duplicates IDs.
    zipWithIndex pays the same cost (its shuffle files persist across
    its two jobs); the checkpoint is the DataFrame equivalent.
+   The checkpoint's one execution still evaluates the input twice: the
+   range exchange first runs a sampling job over its child, then its
+   map stage runs the child again. When the input's plan runs Python
+   (a WARC parse in `mapInPandas`, a pandas UDF), that second pass
+   costs a second parse of every archive, so such an input is cached
+   for the duration of the checkpoint and released once it is
+   materialized. A Python-free input (a parquet scan, an aggregate) is
+   cheaper to evaluate twice than to cache, and is left uncached.
 2. per-partition row counts — a metadata-sized aggregate
    (`num_partitions` rows) kept as a DataFrame end-to-end; the
    prefix-sum offset is a window-free broadcast self-join over those
@@ -31,8 +39,11 @@ to the global-window variant, which the equality test pins.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def range_partitioned(
@@ -44,6 +55,48 @@ def range_partitioned(
     )
 
 
+# Logical plan nodes that hand rows to a Python worker: ArrowEvalPython,
+# BatchEvalPython (row UDFs, after ExtractPythonUDFs), MapInPandas,
+# MapInArrow, FlatMapGroupsInPandas, FlatMapCoGroupsInArrow, ...
+_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def _evaluates_python(df: DataFrame) -> bool:
+    """Whether evaluating ``df`` runs Python, read off its optimized
+    logical plan. A cached relation is a leaf here: reading it back
+    runs no Python, whatever its own plan did."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if _PYTHON_NODE.search(node.nodeName()):
+            return True
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def _checkpointed_ranges(
+    df: DataFrame, order_cols: list[str], num_partitions: int
+) -> DataFrame:
+    """:func:`range_partitioned`, materialized once by an eager local
+    checkpoint. If ``df`` runs Python and is not cached already, it is
+    cached while the checkpoint runs, so the exchange's sampling job
+    and its map stage share one evaluation of it; a frame the caller
+    cached is used as it is and left cached."""
+    ranged = range_partitioned(df, order_cols, num_partitions)
+    # The test reads the plan the checkpoint then executes, so a
+    # Python-free input is planned once, as without the test.
+    owned = df.storageLevel == StorageLevel.NONE and _evaluates_python(ranged)
+    if owned:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        ranged = range_partitioned(df, order_cols, num_partitions)
+    try:
+        return ranged.localCheckpoint(eager=True)
+    finally:
+        if owned:
+            df.unpersist()
+
+
 def assign_sequential_ids(
     df: DataFrame,
     order_cols: list[str] | str,
@@ -52,7 +105,8 @@ def assign_sequential_ids(
 ) -> DataFrame:
     """Dense 1-based IDs ordered by `order_cols`, no global-sort window.
 
-    One range shuffle (materialized exactly once via local checkpoint)
+    One range shuffle (materialized exactly once via local checkpoint,
+    reading one evaluation of ``df`` — see :func:`_checkpointed_ranges`)
     + one metadata-sized count aggregate; the per-partition
     `row_number` windows run in parallel (one group per range
     partition).
@@ -63,9 +117,7 @@ def assign_sequential_ids(
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     # Eager checkpoint: see module docstring — the exchange's reservoir
     # sampling is per-execution, so both passes must share one run.
-    ranged = range_partitioned(df, order_cols, num_partitions).localCheckpoint(
-        eager=True
-    )
+    ranged = _checkpointed_ranges(df, order_cols, num_partitions)
     # Range partitioning on a small/skewed key set may use fewer
     # populated partitions than requested — offsets come from the data.
     counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
@@ -152,9 +204,7 @@ def range_prefix_scan(
             raise ValueError(f"unsupported scan op: {op}")
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    ranged = range_partitioned(df, order_cols, num_partitions).localCheckpoint(
-        eager=True
-    )
+    ranged = _checkpointed_ranges(df, order_cols, num_partitions)
     totals = ranged.groupBy("__pid").agg(
         *[
             _SCAN_OPS[op](c).alias(f"__t_{op}_{c}")

@@ -2105,10 +2105,10 @@ def sim_hard_negatives_frame(
 # Marginal Relevance (Carbonell & Goldstein 1998) is the standard
 # greedy re-ranker. Scale shape: stage 1 is the ordinary distributed
 # exact-cosine top-N over the corpus (TakeOrderedAndProject — the
-# corpus never shuffles); stage 2 runs the greedy MMR chain on the
-# N-row candidate frame, collect-free (the selected set is a grown-by-
-# union DataFrame, always broadcast) — its cost is O(k*N) independent
-# of corpus size, the kcenter discipline applied to retrieval.
+# corpus never shuffles); stage 2 runs the whole greedy MMR chain on
+# the N-row candidate frame in one single-partition Arrow pass — its
+# cost is O(k*N) independent of corpus size, the kcenter discipline
+# applied to retrieval.
 
 MMR_POOL = 16
 MMR_K = 8
@@ -2182,11 +2182,14 @@ sel{r + 1} AS MATERIALIZED (
     f"(TakeOrdered over the corpus — no corpus shuffle), then {MMR_K} "
     "greedy rounds each selecting argmax of 0.7*relevance - "
     "0.3*max-similarity-to-selected (ties to vec_id — a total order). "
-    "Collect-free: the selected set is a grown-by-union DataFrame "
-    "broadcast into each round's candidate scoring, so stage-2 cost is "
-    "O(k*pool) regardless of corpus size (the kcenter discipline). All "
-    "cosine folds run in dimension order on both engines; the DuckDB "
-    "oracle replays the greedy chain as generated per-round SQL",
+    "Collect-free: the checkpointed pool is coalesced to one partition "
+    "and the whole greedy chain runs in a single mapInPandas pass, so "
+    "stage-2 cost is O(k*pool) regardless of corpus size (the kcenter "
+    "discipline). Zero-norm vectors keep the SQL's NULL-division "
+    "semantics: left out of max-similarity, their own score ranked "
+    "last. All cosine folds run in dimension order on both engines; "
+    "the DuckDB oracle replays the greedy chain as generated per-round "
+    "SQL",
     tags=("similarity", "curation"),
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2205,7 +2208,9 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != MMR_QUERY_ID)
         .crossJoin(F.broadcast(q))
         .withColumn(
-            "rel", F.expr(_MMR_DOT_QP) / (F.col("qnrm") * F.col("nrm"))
+            # NULL for a zero norm, as the oracle's division
+            "rel",
+            F.try_divide(F.expr(_MMR_DOT_QP), F.col("qnrm") * F.col("nrm")),
         )
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(MMR_POOL)
@@ -2230,22 +2235,27 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _greedy(batches):  # pragma: no cover — executor-side
         import pandas as pd  # noqa: PLC0415
 
-        rows = pd.concat(list(batches), ignore_index=True)
         cand = [
             (
                 int(t.vec_id),
                 [float(x) for x in t.v],
                 float(t.nrm),
-                float(t.rel),
+                None if pd.isna(t.rel) else float(t.rel),
             )
-            for t in rows.itertuples()
+            for b in batches
+            for t in b.itertuples()
         ]
 
-        def dot(a: list, b: list) -> float:
+        def cos(a: list, anrm: float, b: list, bnrm: float):
+            # x / 0 is NULL in the SQL this replays: a zero norm yields
+            # None, which max() below skips like SQL MAX skips NULL
+            den = anrm * bnrm
+            if den == 0.0:
+                return None
             acc = 0.0
             for x, y in zip(a, b):
                 acc = acc + x * y
-            return acc
+            return acc / den
 
         sel: list = []
         chosen: set = set()
@@ -2255,24 +2265,30 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             for vec_id, v, nrm, rel in cand:
                 if vec_id in chosen:
                     continue
-                if r == 0:
-                    score = rel
-                else:
-                    maxsim = max(
-                        dot(v, sv) / (nrm * snrm)
+                score = rel
+                if r > 0:
+                    sims = [
+                        c
                         for _, sv, snrm, _ in sel
+                        if (c := cos(v, nrm, sv, snrm)) is not None
+                    ]
+                    score = (
+                        None
+                        if rel is None or not sims
+                        else 0.7 * rel - 0.3 * max(sims)
                     )
-                    score = 0.7 * rel - 0.3 * maxsim
-                key = (-score, vec_id)
+                # ORDER BY score DESC NULLS LAST, vec_id: a candidate
+                # with a NULL score only goes once no scored one is left
+                key = (score is None, -(score or 0.0), vec_id)
                 if best_key is None or key < best_key:
                     best, best_key = (vec_id, v, nrm, rel), key
             sel.append(best)
             chosen.add(best[0])
         yield pd.DataFrame(
             {
-                "rnk": list(range(len(sel))),
-                "vec_id": [s[0] for s in sel],
-                "rel": [s[3] for s in sel],
+                "rnk": pd.Series(range(len(sel)), dtype="int64"),
+                "vec_id": pd.Series([s[0] for s in sel], dtype="int64"),
+                "rel": pd.Series([s[3] for s in sel], dtype="float64"),
             }
         )
 

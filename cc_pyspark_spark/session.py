@@ -27,15 +27,28 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's conf profile."""
+    """Build (or reuse) a SparkSession with the engine's conf profile.
+
+    The profile applies only when this call starts the session. A
+    session that is already running is returned with its conf as it
+    is, except for what the caller passes: ``shuffle_partitions`` and
+    ``extra_conf`` are set on it when given, and the profile's defaults
+    never are — a CLI job run inside a live session (a test suite, a
+    benchmark harness) keeps that session's shuffle width.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # The same test getOrCreate uses to reuse a session: the instantiated
+    # one, in any thread, while its context runs. getActiveSession() is
+    # thread-local and misses a session started in another thread.
+    running = SparkSession._instantiatedSession
+    live = running is not None and running._sc._jsc is not None
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    elif not SparkSession.getActiveSession():
+    elif not live:
         builder = builder.master(f"local[{cpus}]")
 
-    conf = {
+    profile = {
         # Driver heap: in local mode driver == all executors, and the
         # JVM otherwise launches with Spark's 1g default — under which
         # broadcast builds start failing once a long session (500-test
@@ -49,9 +62,7 @@ def build_session(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         # Arrow everywhere Python touches rows (pandas UDFs, toPandas).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Determinism: timestamps are wall-clock-free and UTC.
@@ -67,6 +78,9 @@ def build_session(
         "spark.io.compression.codec": "zstd",
         "spark.ui.enabled": "false",
     }
+    conf = {} if live else profile
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

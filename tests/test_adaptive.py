@@ -64,6 +64,65 @@ def test_loop_shuffle_aqe_scope(spark, monkeypatch):
     assert spark.conf.get(key) == before
 
 
+def test_loop_shuffle_aqe_mode_is_case_normalised_and_validated(
+    spark, monkeypatch
+):
+    key = "spark.sql.adaptive.enabled"
+    shuffle_key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    before_shuffle = spark.conf.get(shuffle_key)
+    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", " ON ")
+    with loop_shuffle(spark, 1, n_cols=2):
+        assert spark.conf.get(key) == before
+    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "Off")
+    with loop_shuffle(spark, 1, n_cols=2, aqe="on"):
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == before
+    # anything else fails loudly, before the session conf is touched
+    for bad in ("true", "1", ""):
+        monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_LOOP_AQE"):
+            with loop_shuffle(spark, 1, n_cols=2):
+                pass
+    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE")
+    with pytest.raises(ValueError):
+        with loop_shuffle(spark, 1, n_cols=2, aqe="auto"):
+            pass
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(shuffle_key) == before_shuffle
+
+
+def test_loop_shuffle_restores_when_entering_the_scope_fails(spark, monkeypatch):
+    """A conf.set that fails while the scope is entered must not leak
+    the overrides already applied."""
+    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    aqe_key = "spark.sql.adaptive.enabled"
+
+    class _FailingAqeConf:
+        def __init__(self, conf):
+            self._conf = conf
+
+        def get(self, k):
+            return self._conf.get(k)
+
+        def set(self, k, v):
+            if k == aqe_key and v == "false":
+                raise RuntimeError("conf rejected")
+            self._conf.set(k, v)
+
+    class _Session:
+        conf = _FailingAqeConf(spark.conf)
+
+    before = spark.conf.get(key)
+    before_aqe = spark.conf.get(aqe_key)
+    with pytest.raises(RuntimeError, match="conf rejected"):
+        with loop_shuffle(_Session(), 1, n_cols=2):
+            pass
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(aqe_key) == before_aqe
+
+
 def test_loop_operators_invariant_to_derived_count(spark, monkeypatch):
     """Same labels/ranks whether the derivation lands at 1 partition or
     at the conf cap — the adaptive count must never change results

@@ -182,29 +182,77 @@ def test_cc_index_export(spark, corpus, tmp_path):
 
 
 def test_cli_emits_job_metrics(spark, corpus, tmp_path, capsys):
+    """Every archive is parsed once per job. warc_to_documents' range
+    exchange samples its input before it shuffles it; evaluating the
+    input twice would count every file and record twice."""
     import json as _json
 
-    rc = runner_main(
-        [
-            "word_count",
-            corpus["manifest"],
-            str(tmp_path / "wc_out"),
-            "--num_input_partitions",
-            "2",
-            "--num_output_partitions",
-            "1",
+    for job in ("word_count", "warc_to_documents"):
+        rc = runner_main(
+            [
+                job,
+                corpus["manifest"],
+                str(tmp_path / f"{job}_out"),
+                "--num_input_partitions",
+                "2",
+                "--num_output_partitions",
+                "1",
+            ]
+        )
+        assert rc == 0
+        lines = [
+            ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")
         ]
-    )
-    assert rc == 0
-    lines = [
-        ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")
-    ]
-    m = _json.loads(lines[-1])
-    assert m["job"] == "word_count"
-    assert m["files_processed"] == len(corpus["files"])
-    assert m["files_failed"] == 0
-    assert m["records_processed"] > 0
-    assert m["output_rows"] > 0
+        m = _json.loads(lines[-1])
+        assert m["job"] == job
+        assert m["files_processed"] == len(corpus["files"])
+        assert m["files_failed"] == 0
+        assert m["records_processed"] > 0
+        assert m["output_rows"] > 0
+
+
+def test_cli_keeps_a_live_sessions_shuffle_width(spark, corpus, tmp_path):
+    """A CLI job run inside a live session must not re-impose the
+    session profile's defaults on it, from the session's own thread or
+    from another one (the active session is thread-local; the session
+    getOrCreate reuses is not)."""
+    import threading
+
+    from cc_pyspark_spark.session import build_session
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def run_job(out):
+        out.append(
+            runner_main(
+                [
+                    "server_count",
+                    corpus["manifest"],
+                    str(tmp_path / f"sc_out_{len(out)}"),
+                    "--num_output_partitions",
+                    "1",
+                ]
+            )
+        )
+
+    try:
+        live = build_session(shuffle_partitions=5)
+        assert live.conf.get(key) == "5"
+        rcs: list[int] = []
+        run_job(rcs)
+        assert rcs == [0]
+        assert live.conf.get(key) == "5"
+        worker = threading.Thread(target=run_job, args=(rcs,))
+        worker.start()
+        worker.join()
+        assert rcs == [0, 0]
+        assert live.conf.get(key) == "5"
+        # passing nothing keeps it too; passing a width applies it
+        assert build_session().conf.get(key) == "5"
+        assert build_session(shuffle_partitions=6).conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_cli_dedup_documents_cluster(tmp_path):

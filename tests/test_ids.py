@@ -124,6 +124,69 @@ def test_range_prefix_sums_partition_invariance(spark):
     assert outs[0] == outs[1] == outs[2]
 
 
+def test_range_operators_evaluate_their_input_once(spark):
+    """The range exchange samples its child before it shuffles it; the
+    input must still be evaluated once per row (an upstream WARC parse
+    or pandas UDF is the expensive part), and its cache must be gone
+    when the operator returns."""
+    from pyspark.storagelevel import StorageLevel
+
+    from cc_pyspark_spark.operators.ids import range_prefix_sums
+
+    n = 300
+    for run in (
+        lambda df: assign_sequential_ids(df, "k", num_partitions=4),
+        lambda df: range_prefix_sums(df, ["k"], ["k"], num_partitions=4),
+    ):
+        evaluated = spark.sparkContext.accumulator(0)
+
+        def counted(k, acc=evaluated):
+            acc.add(1)
+            return k
+
+        df = spark.range(0, n, numPartitions=3).select(
+            F.udf(counted, "long")("id").alias("k")
+        )
+        out = run(df).collect()
+        assert len(out) == n
+        assert evaluated.value == n
+        assert df.storageLevel == StorageLevel.NONE
+
+
+def test_range_operators_leave_a_callers_cache_alone(spark):
+    from pyspark.storagelevel import StorageLevel
+
+    df = spark.range(0, 100).select(F.col("id").alias("k")).cache()
+    try:
+        ids = sorted(
+            r["id"] for r in assign_sequential_ids(df, "k", num_partitions=4).collect()
+        )
+        assert ids == list(range(1, 101))
+        assert df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()
+
+
+def test_only_inputs_that_run_python_are_cached(spark):
+    """The input cache is for inputs whose evaluation runs Python; a
+    Python-free plan, or one whose Python sits behind a cache, is read
+    twice rather than copied."""
+    from cc_pyspark_spark.operators.ids import _evaluates_python
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    assert not _evaluates_python(docs.groupBy("lang").count())
+    row_udf = docs.select(F.udf(lambda s: s, "string")("text").alias("u"))
+    assert _evaluates_python(row_udf.filter(F.length("u") > 0))
+    parsed = docs.select("doc_id").mapInPandas(lambda it: it, "doc_id long")
+    assert _evaluates_python(parsed)
+    cached = row_udf.cache()
+    try:
+        cached.count()
+        assert not _evaluates_python(cached.filter(F.length("u") > 0))
+    finally:
+        cached.unpersist()
+
+
 def test_ks_drift_matches_bruteforce_property(spark):
     """The integer-CDF KS algebra (events_ks_drift's core) equals a
     plain-Python brute-force sup|F_a - F_b| on random samples."""

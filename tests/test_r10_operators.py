@@ -5,6 +5,7 @@ tests/test_oracle_parity.py already replays at sf0.001)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cc_pyspark_spark.plans import QUERIES
@@ -100,6 +101,80 @@ def test_mmr_first_pick_is_most_relevant_and_diverse_after(spark):
     assert len({r["vec_id"] for r in rows}) == 8  # no repeats
     # rank 0 is the pure-relevance argmax of the pool
     assert rows[0]["rel"] == max(r["rel"] for r in rows)
+
+
+def _mmr_on_embeddings(spark, tmp_path, vectors):
+    """sim_mmr_rerank and its DuckDB oracle over an embeddings table of
+    ``vectors`` ({vec_id: [floats]}), both as pandas frames."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cc_pyspark_spark.plans.similarity import _duck_mmr_oracle
+
+    ids = sorted(vectors)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(
+                    [vectors[i] for i in ids], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(ids), pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    got = QUERIES["sim_mmr_rerank"].spark(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"'{tmp_path / 'embeddings.parquet'}'"
+    )
+    want = con.sql(_duck_mmr_oracle()).df()
+    con.close()
+    return got, want
+
+
+@pytest.mark.parametrize(
+    "vectors,n_picked",
+    [
+        # only the query vector: the candidate pool is empty
+        pytest.param({0: [1.0, 0.0]}, 0, id="empty_pool"),
+        # zero-norm candidates 1 and 3: their cosines are NULL, so they
+        # are left out of max-similarity and picked after every scored
+        # candidate
+        pytest.param(
+            {
+                0: [1.0, 0.5, 0.0],
+                1: [0.0, 0.0, 0.0],
+                2: [1.0, 0.4, 0.1],
+                3: [0.0, 0.0, 0.0],
+                4: [0.2, 1.0, 0.3],
+                5: [0.9, 0.6, 0.0],
+                6: [0.1, 0.1, 1.0],
+            },
+            6,
+            id="zero_norm_candidates",
+        ),
+        # a zero query vector makes every relevance NULL: all picks fall
+        # back to the vec_id tie-break
+        pytest.param(
+            {0: [0.0, 0.0], **{i: [float(i % 3), 1.0] for i in range(1, 12)}},
+            8,
+            id="zero_query",
+        ),
+    ],
+)
+def test_mmr_degenerate_inputs_match_oracle(spark, tmp_path, vectors, n_picked):
+    """Empty pools and zero norms follow the DuckDB oracle's NULL
+    division instead of raising in the greedy pass."""
+    from tests.oracle_compare import assert_frames_match
+
+    got, want = _mmr_on_embeddings(spark, tmp_path, vectors)
+    assert list(got.columns) == ["rnk", "vec_id", "rel"]
+    assert len(got) == n_picked
+    assert_frames_match(got, want, "sim_mmr_rerank")
 
 
 def test_tar_index_matches_stdlib_listing(spark):
