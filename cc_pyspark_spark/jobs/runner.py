@@ -805,9 +805,9 @@ def _run_graph_analyze(spark, args: argparse.Namespace) -> int:
     edges = spark.read.parquet(args.input).select("s", "t")
     algo = args.graph_algo
     if algo == "pagerank":
-        from cc_pyspark_spark.operators.pagerank import pagerank  # noqa: PLC0415
+        from cc_pyspark_spark.operators.pagerank import pagerank_fixed  # noqa: PLC0415
 
-        df = pagerank(edges, n_iter=_rounds(args, 10))
+        df = pagerank_fixed(edges, n_iter=_rounds(args, 10))
         sort_cols = ["id"]
     elif algo == "pagerank_converged":
         from cc_pyspark_spark.operators.pagerank import (  # noqa: PLC0415

@@ -8,7 +8,9 @@ pagerank.py): the edge frame is cached once, every round is a constant
 number of key-partitioned shuffles over frames whose size never grows,
 and all state is integer-or-string columns so results are bit-identical
 across partitionings, runs, and engines — which is what lets even these
-ITERATIVE algorithms carry full value-hash DuckDB oracles.
+ITERATIVE algorithms carry full value-hash DuckDB oracles. Each
+algorithm has one round step that its fixed-round and converged entry
+points share; the loops run through operators/adaptive.py.
 
 Scale shapes (100 TB / 10^9-vertex web graph):
 
@@ -32,12 +34,13 @@ Scale shapes (100 TB / 10^9-vertex web graph):
 from __future__ import annotations
 
 from contextlib import nullcontext
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cc_pyspark_spark.caching import track_cache
-from cc_pyspark_spark.operators.adaptive import loop_shuffle
+from cc_pyspark_spark.operators.adaptive import iterate, loop_shuffle
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -47,9 +50,49 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     ).unionAll(edges.select(F.col("b").alias("s"), F.col("a").alias("t")))
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 4, checkpoint_every: int = 4
-) -> DataFrame:
+def _lpa_setup(
+    e: DataFrame,
+) -> "tuple[DataFrame, Callable[[DataFrame], DataFrame]]":
+    """Cached adjacency + round step shared by the LPA entry points ->
+    (round-0 labels, step).
+
+    The adjacency holds the neighbour edges plus one self-loop per
+    vertex (the self-vote) and is cached pre-partitioned on the
+    per-round join key, so with the label frame partitioned by id from
+    its regroup the round's only exchange is the (t, lab) plurality
+    regroup."""
+    verts = _symmetrize(e).select(F.col("s").alias("id")).distinct()
+    sym = (
+        _symmetrize(e)
+        .unionAll(verts.select(F.col("id").alias("s"), F.col("id").alias("t")))
+        .repartition("s")
+        .sortWithinPartitions("s")
+        .persist()
+        .transform(track_cache)
+    )
+
+    def step(lab: DataFrame) -> DataFrame:
+        cnt = (
+            sym.join(lab, sym.s == lab.id)
+            .groupBy(sym.t, lab.lab)
+            .agg(F.count("*").alias("cnt"))
+        )
+        # plurality label, smallest label on ties: min over the
+        # lexicographic struct (-cnt, lab) — one aggregation, no window
+        return (
+            cnt.groupBy("t")
+            .agg(
+                F.min(
+                    F.struct((-F.col("cnt")).alias("nc"), F.col("lab"))
+                ).alias("m")
+            )
+            .select(F.col("t").alias("id"), F.col("m.lab").alias("lab"))
+        )
+
+    return verts.select("id", F.col("id").alias("lab")), step
+
+
+def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007), fixed
     round count, deterministic tie-break, self-inclusive voting.
 
@@ -68,13 +111,6 @@ def label_propagation(
 
     Returns (id, community) — community = the round-``rounds`` label.
 
-    Lineage: each round adds one join + two aggregations on top of the
-    previous label frame, so plan DEPTH grows linearly with rounds
-    (execution cost doesn't — the adjacency is cached); past a handful
-    of rounds Catalyst analysis time would dominate, so the label
-    frame truncates every ``checkpoint_every`` rounds, same discipline
-    as pagerank_fixed / cc_alternating (operators/pagerank.py).
-
     ``rounds=0`` returns the round-0 identity labeling (every vertex
     its own community) — the loop-free contract the history variant
     can't express (its history would be empty).
@@ -86,87 +122,68 @@ def label_propagation(
             .distinct()
             .select("id", F.col("id").alias("community"))
         )
-    return label_propagation_history(edges, rounds, checkpoint_every)[-1]
+    return label_propagation_history(edges, rounds)[-1]
 
 
 def label_propagation_history(
-    edges: DataFrame,
-    rounds: int,
-    checkpoint_every: int = 4,
-    checkpoint_each: bool = False,
+    edges: DataFrame, rounds: int, checkpoint_each: bool = False
 ) -> list[DataFrame]:
     """Per-round label frames of :func:`label_propagation` (element r-1
     is the round-r partition) — exposed so partition-quality metrics
     (graph_modularity's Q-vs-round curve) can evaluate every sweep
     without re-running the propagation.
 
-    Callers that consume EVERY round's frame (each metric reads a frame
-    several times) pass ``checkpoint_each=True``: every round is then
-    eagerly materialized once, so downstream multi-reference cost is
-    O(rounds), not multiplicative lineage replay (the modularity bench
-    row read 29 s before this, 3^rounds replays of round 1)."""
+    Each round adds one join + two aggregations on top of the previous
+    label frame, so plan depth grows linearly with rounds; the label
+    frame is truncated every 4 rounds except the last (the caller's
+    action materialises that one). Callers that consume EVERY round's
+    frame (each metric reads a frame several times) pass
+    ``checkpoint_each=True``: every round is then eagerly materialized
+    once, so downstream multi-reference cost is O(rounds), not
+    multiplicative lineage replay (the modularity bench row read 29 s
+    before this, 3^rounds replays of round 1).
+
+    Only the ``checkpoint_each`` path takes a loop_shuffle scope: the
+    plain path runs no action of its own, so its plan executes at the
+    caller's action after a scope is restored (operators/adaptive.py).
+    The loop is written out rather than run by ``iterate``: it keeps
+    every round's frame, and the plain path leaves its last round
+    without a checkpoint.
+    """
     e = edges.persist().transform(track_cache)
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py) — ONLY on the checkpoint_each path, where
-    # every round eagerly materializes inside the scope so all loop
-    # exchanges plan at the derived count. The plain fixed-round path
-    # runs its whole plan at the CALLER's action, after the scope is
-    # restored — there a smaller cache would stop co-partitioning with
-    # the conf-count label regroup and ADD one exchange per round (the
-    # hits_fixed rationale). The count materializes the e persist,
-    # which the sym cache build pays today anyway.
     scope = (
         loop_shuffle(e.sparkSession, e.count(), n_cols=2)
         if checkpoint_each
         else nullcontext()
     )
     with scope:
-        verts = (
-            _symmetrize(e).select(F.col("s").alias("id")).distinct()
-        )
-        # neighbor edges + one self-loop per vertex (the self-vote).
-        # Cached PRE-PARTITIONED on the per-round join key (r15, guide
-        # §2.4 — the pagerank adj discipline): every round joins
-        # sym.s == lab.id with the label frame already partitioned by
-        # id from its regroup, so with hashpartitioning(s) in the cache
-        # the round's only exchange is the (t, lab) plurality regroup;
-        # the O(E) adjacency no longer re-exchanges each round.
-        sym = (
-            _symmetrize(e)
-            .unionAll(
-                verts.select(F.col("id").alias("s"), F.col("id").alias("t"))
-            )
-            .repartition("s")
-            .sortWithinPartitions("s")
-            .persist()
-            .transform(track_cache)
-        )
-        lab = verts.select("id", F.col("id").alias("lab"))
+        lab, step = _lpa_setup(e)
         history: list[DataFrame] = []
-        for i in range(rounds):
-            cnt = (
-                sym.join(lab, sym.s == lab.id)
-                .groupBy(sym.t, lab.lab)
-                .agg(F.count("*").alias("cnt"))
-            )
-            # plurality label, smallest label on ties: min over the
-            # lexicographic struct (-cnt, lab) — one aggregation, no
-            # window
-            lab = (
-                cnt.groupBy("t")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("cnt")).alias("nc"), F.col("lab"))
-                    ).alias("m")
-                )
-                .select(F.col("t").alias("id"), F.col("m.lab").alias("lab"))
-            )
-            if checkpoint_each or (
-                (i + 1) % checkpoint_every == 0 and (i + 1) < rounds
-            ):
+        for i in range(1, rounds + 1):
+            lab = step(lab)
+            if checkpoint_each or (i % 4 == 0 and i < rounds):
                 lab = lab.localCheckpoint(eager=True)
             history.append(lab.select("id", F.col("lab").alias("community")))
         return history
+
+
+def _label_mismatches(a: DataFrame, *others: DataFrame) -> "list[int]":
+    """Per frame in ``others``, how many ids carry a different label
+    than in ``a``: one join of the id-partitioned checkpoints and one
+    action, however many frames are compared."""
+    joined = a
+    for i, o in enumerate(others):
+        joined = joined.join(
+            o.select(F.col("id").alias(f"id{i}"), F.col("lab").alias(f"lab{i}")),
+            a.id == F.col(f"id{i}"),
+        )
+    row = joined.agg(
+        *(
+            F.count(F.when(F.col("lab") != F.col(f"lab{i}"), 1)).alias(f"d{i}")
+            for i in range(len(others))
+        )
+    ).collect()[0]
+    return [int(d) for d in row]
 
 
 def lpa_converged(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -190,129 +207,62 @@ def lpa_converged(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
       regardless of which phase the detector fires in, so the result is
       independent of max_rounds and of when detection happens.
 
-    Each probe is one O(V)-row join between two checkpointed label
-    frames producing a driver-side scalar — the same discipline as
-    cc_alternating_converged's count probe (operators/pagerank.py:371).
-    Per round the only moving data is the O(V) label frame against the
-    cached adjacency, identical to the fixed-round plan.
+    Both counts come from one action per round over the checkpointed
+    label frames. Per round the only moving data is the O(V) label
+    frame against the cached adjacency, identical to the fixed-round
+    plan.
     """
     e = edges.persist().transform(track_cache)
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py): the count materializes the e persist —
-    # work the sym cache build pays today — and every round's stop
-    # probe plans inside the scope. Labels are integer min/argmin
-    # state, bit-identical under any partitioning.
-    n_edges = e.count()
-    with loop_shuffle(e.sparkSession, n_edges, n_cols=2):
-        verts = _symmetrize(e).select(F.col("s").alias("id")).distinct()
-        # Pre-partitioned on the join key — see
-        # label_propagation_history.
-        sym = (
-            _symmetrize(e)
-            .unionAll(
-                verts.select(F.col("id").alias("s"), F.col("id").alias("t"))
-            )
-            .repartition("s")
-            .sortWithinPartitions("s")
-            .persist()
-            .transform(track_cache)
-        )
+    with loop_shuffle(e.sparkSession, e.count(), n_cols=2):
+        lab, step = _lpa_setup(e)
+        prev2: "DataFrame | None" = None
 
-        def diff_count(a: DataFrame, b: DataFrame) -> int:
-            return (
-                a.join(
-                    b.select(
-                        F.col("id").alias("id2"), F.col("lab").alias("lab2")
-                    ),
-                    a.id == F.col("id2"),
-                )
-                .filter(F.col("lab") != F.col("lab2"))
-                .count()
-            )
-
-        def diff2_counts(
-            a: DataFrame, b: DataFrame, c: DataFrame
-        ) -> "tuple[int, int]":
-            """Both per-round stop probes in ONE driver action (r15
-            optimization round — the hits_converged linf2 discipline):
-            join the three checkpointed id-partitioned label frames
-            once and count fixed-point and period-2 mismatches in the
-            same aggregate. The stop rule is unchanged — the caller
-            checks the fixed-point count first, exactly as the two
-            sequential probes did; the cycle probe merely runs
-            unconditionally inside the same (zero-exchange) pass
-            instead of as a second job."""
-            row = (
-                a.join(
-                    b.select(
-                        F.col("id").alias("id2"), F.col("lab").alias("lab2")
-                    ),
-                    a.id == F.col("id2"),
-                )
-                .join(
-                    c.select(
-                        F.col("id").alias("id3"), F.col("lab").alias("lab3")
-                    ),
-                    a.id == F.col("id3"),
-                )
-                .agg(
-                    F.count(F.when(F.col("lab") != F.col("lab2"), 1)).alias(
-                        "d1"
-                    ),
-                    F.count(F.when(F.col("lab") != F.col("lab3"), 1)).alias(
-                        "d2"
-                    ),
-                )
-                .collect()[0]
-            )
-            return int(row["d1"]), int(row["d2"])
-
-        lab = verts.select("id", F.col("id").alias("lab")).localCheckpoint(
-            eager=True
-        )
-        prev2: DataFrame | None = None
-        for _ in range(max_rounds):
-            cnt = (
-                sym.join(lab, sym.s == lab.id)
-                .groupBy(sym.t, lab.lab)
-                .agg(F.count("*").alias("cnt"))
-            )
-            nxt = (
-                cnt.groupBy("t")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("cnt")).alias("nc"), F.col("lab"))
-                    ).alias("m")
-                )
-                .select(F.col("t").alias("id"), F.col("m.lab").alias("lab"))
-                # Lazy: the probe action below materializes the
-                # checkpoint in the same job (r15 optimization round).
-                .localCheckpoint(eager=False)
-            )
+        def settled(new: DataFrame, old: DataFrame) -> "DataFrame | None":
+            nonlocal prev2
             if prev2 is None:
-                d1, d2 = diff_count(nxt, lab), 1
+                (d1,), d2 = _label_mismatches(new, old), 1
             else:
-                d1, d2 = diff2_counts(nxt, lab, prev2)
+                d1, d2 = _label_mismatches(new, old, prev2)
+            prev2 = old
             if d1 == 0:
-                return nxt.select("id", F.col("lab").alias("community"))
+                return new.select("id", F.col("lab").alias("community"))
             if d2 == 0:
-                # period-2 cycle: canonicalize via the elementwise min
-                # of the two alternating phases (nxt and lab are the
-                # phases)
-                return (
-                    nxt.join(
-                        lab.select(
-                            F.col("id").alias("id2"),
-                            F.col("lab").alias("lab2"),
-                        ),
-                        nxt.id == F.col("id2"),
-                    )
-                    .select("id", F.least("lab", "lab2").alias("community"))
-                )
-            prev2, lab = lab, nxt
-    raise RuntimeError(
-        f"lpa_converged: no fixed point or 2-cycle within {max_rounds} rounds"
+                # period-2 cycle: the elementwise min of the two phases
+                return new.join(
+                    old.select(F.col("id").alias("id2"), F.col("lab").alias("lab2")),
+                    new.id == F.col("id2"),
+                ).select("id", F.least("lab", "lab2").alias("community"))
+            return None
+
+        return iterate(
+            step, lab.localCheckpoint(eager=True), max_rounds, stop=settled,
+            guard="lpa_converged: no fixed point or 2-cycle",
+        )
+
+
+def _core_degrees(cur: DataFrame) -> DataFrame:
+    """(id, deg) of every vertex of the edge frame ``cur``."""
+    return (
+        _symmetrize(cur)
+        .groupBy("s")
+        .agg(F.count("*").alias("deg"))
+        .select(F.col("s").alias("id"), "deg")
     )
+
+
+def _peel(k: int) -> Callable[[DataFrame], DataFrame]:
+    """k-core round step: drop the edges with an endpoint of degree < k
+    (one degree count + a double semi-join)."""
+
+    def step(cur: DataFrame) -> DataFrame:
+        alive = _core_degrees(cur).filter(F.col("deg") >= k).select(
+            F.col("id").alias("v")
+        )
+        return cur.join(alive, cur.a == alive.v, "left_semi").join(
+            alive, cur.b == alive.v, "left_semi"
+        )
+
+    return step
 
 
 def kcore(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
@@ -326,11 +276,13 @@ def kcore(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     should use :func:`kcore_converged`, which probes for the fixed
     point instead of trusting a round count.
 
-    Lineage: the edge frame is referenced three times per round (two
-    degree legs + the filter join), so the logical plan grows ~4x per
-    round — rounds are truncated with an eager localCheckpoint exactly
-    like cc_alternating (operators/pagerank.py), which also makes each
-    round's shrinking edge set compute once.
+    The edge frame is referenced three times per round (two degree
+    legs + the filter join), so every round is truncated, which also
+    makes each round's shrinking edge set compute once. The seed stays
+    lazy: round 1's three reads share their exchanges, and an eager
+    seed checkpoint measured +8%. The loop_shuffle scope is therefore
+    sized after round 1, from a count of its checkpoint, and keeps AQE
+    (the alive side shrinks every round; operators/adaptive.py).
 
     r15 note: a window-degree formulation (count over partitionBy(s) +
     canonical-pair min regroup — two exchanges, zero joins) was tried
@@ -340,53 +292,12 @@ def kcore(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     semi-joins whose alive side is post-filter small. Kept the join
     formulation.
     """
-    # Round 1 references the seed three times (two symmetrize legs +
-    # the filter join), but the replays share their Exchange subtrees
-    # via ReusedExchange, so an eager seed checkpoint is a net LOSS
-    # (r15 measured +8%: one extra materialization pass buys reads
-    # that were already shared) — leave the seed lazy.
-    cur = edges.select("a", "b")
-    scope = None
-    try:
-        for i in range(rounds):
-            deg = (
-                _symmetrize(cur)
-                .groupBy("s")
-                .agg(F.count("*").alias("deg"))
-            )
-            alive = deg.filter(F.col("deg") >= k).select(
-                F.col("s").alias("v")
-            )
-            cur = (
-                cur.join(alive, cur.a == alive.v, "left_semi")
-                .join(alive, cur.b == alive.v, "left_semi")
-                # eager: the lazy variant straddled noise in the r15
-                # sandwich A/B (3.47 -> 3.28/3.65 s) and shares
-                # cc_alternating's multi-reference concurrent-
-                # materialize hazard — keep the measured-safe shape.
-                .localCheckpoint(eager=True)
-            )
-            if i == 0:
-                # Scale-adaptive loop partitioning for rounds 2+ (r15
-                # optimization round, see operators/adaptive.py),
-                # derived AFTER round 1 so the count is a scan of the
-                # checkpoint just materialized — the lazy seed stays
-                # lazy (an up-front edge count would re-run the
-                # caller's pipeline; the eager seed checkpoint that
-                # would make it cheap measured +8% in r15).
-                # aqe="on": peeling's alive side SHRINKS per round, and
-                # AQE's runtime SMJ -> broadcast conversion of the two
-                # semi-joins is worth more than checkpoint laziness
-                # (r16 interleaved A/B: 1.19x WORSE with AQE off).
-                scope = loop_shuffle(
-                    cur.sparkSession, cur.count(), n_cols=2, aqe="on"
-                )
-                scope.__enter__()
-        deg = _symmetrize(cur).groupBy("s").agg(F.count("*").alias("deg"))
-        return deg.select(F.col("s").alias("id"), "deg")
-    finally:
-        if scope is not None:
-            scope.__exit__(None, None, None)
+    cur, peel = edges.select("a", "b"), _peel(k)
+    if rounds > 0:
+        cur = iterate(peel, cur, 1)
+        with loop_shuffle(cur.sparkSession, cur.count(), n_cols=2, aqe="on"):
+            cur = iterate(peel, cur, rounds - 1)
+    return _core_degrees(cur)
 
 
 def kcore_converged(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
@@ -401,33 +312,18 @@ def kcore_converged(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame
     """
     cur = edges.select("a", "b").localCheckpoint(eager=True)
     n = cur.count()
-    # Scale-adaptive loop partitioning derived from the count the
-    # fixed-point probe needs anyway (r15 optimization round, see
-    # operators/adaptive.py). aqe="on" — the kcore rationale above
-    # (r16 A/B: 1.16x WORSE with AQE off on this row).
+    # aqe="on": the alive side shrinks every round (see kcore)
     with loop_shuffle(cur.sparkSession, n, n_cols=2, aqe="on"):
-        for _ in range(max_rounds):
-            deg = _symmetrize(cur).groupBy("s").agg(
-                F.count("*").alias("deg")
-            )
-            alive = deg.filter(F.col("deg") >= k).select(
-                F.col("s").alias("v")
-            )
-            nxt = (
-                cur.join(alive, cur.a == alive.v, "left_semi")
-                .join(alive, cur.b == alive.v, "left_semi")
-                # Lazy: the count() probe on the next line materializes
-                # the checkpoint in the same job (r15 optimization
-                # round).
-                .localCheckpoint(eager=False)
-            )
-            m = nxt.count()
+
+        def settled(new: DataFrame, _old: DataFrame) -> "DataFrame | None":
+            nonlocal n
+            m = new.count()
             if m == n:
-                deg = _symmetrize(nxt).groupBy("s").agg(
-                    F.count("*").alias("deg")
-                )
-                return deg.select(F.col("s").alias("id"), "deg")
-            cur, n = nxt, m
-    raise RuntimeError(
-        f"kcore_converged: no fixed point within {max_rounds} rounds"
-    )
+                return _core_degrees(new)
+            n = m
+            return None
+
+        return iterate(
+            _peel(k), cur, max_rounds, stop=settled,
+            guard="kcore_converged: no fixed point",
+        )

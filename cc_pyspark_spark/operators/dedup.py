@@ -634,7 +634,7 @@ def canonical_survivors(
     from cc_pyspark_spark.operators.pagerank import connected_components  # noqa: PLC0415
 
     edges = pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("t"))
-    comp = connected_components(edges, probe_every=2, checkpoint_every=2)
+    comp = connected_components(edges, probe_every=2)
     base = docs.select(id_col)
     return (
         base.join(comp, base[id_col] == comp.id, "left")
@@ -1298,7 +1298,7 @@ def soft_dedup_weights(
     from cc_pyspark_spark.operators.pagerank import connected_components  # noqa: PLC0415
 
     edges = pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("t"))
-    comp = connected_components(edges, probe_every=2, checkpoint_every=2)
+    comp = connected_components(edges, probe_every=2)
     base = docs.select(id_col)
     keyed = (
         base.join(comp, base[id_col] == comp.id, "left")

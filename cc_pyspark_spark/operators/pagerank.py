@@ -1,81 +1,58 @@
-"""PageRank over the integer host graph (iterative DataFrame algorithm).
+"""Graph operators over integer (or string) vertex ids: PageRank,
+connected components, triangles, BFS and HITS, in pure DataFrame
+algebra (no GraphX/GraphFrames dependency).
 
 The reference stops at building the graph tables
-(hostlinks_to_graph.py); ranking them is the natural next operator for
-a web-graph pipeline. Implemented as damped power iteration in pure
-DataFrame algebra — no GraphX/GraphFrames dependency:
-
-    r_{k+1}(v) = (1-d)/N + d * (Σ_{u→v} r_k(u)/outdeg(u) + dangling/N)
-
-Scale notes: each iteration is one shuffle keyed by target vertex
-(contribution aggregation) plus a broadcast-sized dangling-mass scalar.
-The dangling mass stays INSIDE the plan — a 1-row aggregate cross-
-joined (broadcast) into the rank update — so building all n_iter
-iterations launches no driver actions; the only actions are the eager
-`localCheckpoint` lineage truncations every `checkpoint_every`
-iterations (the classic iterative-algorithm failure mode on Spark is
-linear lineage growth, not the checkpoint cost).
+(hostlinks_to_graph.py); ranking and analysing them is the natural next
+tier of a web-graph pipeline. Every loop state is integer or
+fixed-point, so results are bit-identical across partitionings, runs
+and engines, which lets each iterative operator carry a DuckDB
+value-hash oracle. Every loop caches its adjacency once, pre-partitioned
+on the per-round join key, so per round only the O(V) state frame
+shuffles. The loops run through operators/adaptive.py: ``loop_shuffle``
+scopes the loop's partition count and ``iterate`` owns the rounds,
+checkpoints, probes and guard.
 """
 
 from __future__ import annotations
 
-from cc_pyspark_spark.caching import track_cache
-from cc_pyspark_spark.operators.adaptive import loop_shuffle
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cc_pyspark_spark.caching import track_cache
+from cc_pyspark_spark.operators.adaptive import (
+    iterate,
+    loop_shuffle,
+    truncate_lineage,
+)
 
-def _truncate_lineage(edges: DataFrame) -> DataFrame:
-    """Persist + eager localCheckpoint of an iterative operator's edge
-    input (r15 optimization round, guide §3.3/§5 — materialising an
-    intermediate truncates the plan).
-
-    Why BOTH: every downstream plan construction (lazy checkpoints
-    included — under AQE ``Dataset.localCheckpoint`` materialises every
-    query stage to create its RDD even with ``eager=False``)
-    re-analyses and re-canonicalises the full lineage of every frame it
-    references. For a HUGE caller lineage (the LSH pair pipeline, the
-    WAT parse) that analysis alone measured 6.5 s to materialise 81
-    edges and 5 s per convergence probe at sf0.1. The checkpoint
-    replaces the lineage with a LogicalRDD; the plan-keyed persist
-    underneath keeps the computed edges warm across rebuilt identical
-    pipelines (a checkpoint alone re-ran the caller's pipeline per
-    rebuild — measured on wat_host_pagerank, 5.5 -> 7.7 s).
-
-    Use ONLY where the caller lineage is big (the CC family fed by
-    LSH pair pipelines; wat_host_pagerank's parse). Two negative
-    results pin the boundaries: (a) under AQE a LogicalRDD does NOT
-    preserve partitioning (verified in-plan), so the pre-partitioned
-    per-round caches must stay persists, never checkpoints; (b) a
-    LogicalRDD is identity-keyed, not plan-keyed, so caches DERIVED
-    from the checkpoint miss the CacheManager on every rebuilt
-    pipeline — applying this at the entry of the co-order-fed
-    pagerank/HITS/LPA operators made their derived vertex/degree/
-    adjacency caches rebuild per bench run and measured pagerank_
-    converged 12 -> 17 s warm. The per-probe planning cost there is
-    AQE stage materialisation, not lineage analysis, and this helper
-    does not address it."""
-    return (
-        edges.persist().transform(track_cache).localCheckpoint(eager=True)
-    )
+#: Fixed-point scale for :func:`pagerank_fixed` — 1.0 of rank mass is
+#: 10^15 units, leaving headroom to BIGINT overflow at
+#: damping_pct * mass = 100 * 10^15 << 2^63.
+PAGERANK_SCALE = 10**15
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """edges(s, t) integer vertex ids → (id, rank); Σ rank == 1.
+def _pagerank_setup(
+    edges: DataFrame, damping_pct: int, assume_no_dangling: bool,
+    assume_symmetric: bool,
+) -> "tuple[DataFrame, Callable[[DataFrame], DataFrame]]":
+    """Caches and round step shared by :func:`pagerank_fixed` and
+    :func:`pagerank_converged` -> (round-0 ranks, step).
 
-    Deliberately NOT scale-adaptive-partitioned (r15 optimization
-    round, operators/adaptive.py): this is the DOUBLE-typed variant,
-    and float SUM is order-dependent — changing the partition count
-    would change the last-ulp rank values run-over-run. Every benched /
-    oracled path uses :func:`pagerank_fixed`; callers who want the
-    adaptive loop use that.
-    """
+    Degree rides the edge list (attached once) and the adjacency is
+    cached pre-partitioned on the join key: InMemoryRelation keeps its
+    outputPartitioning, so every round's rank join reuses the cached
+    layout and the O(E) edge side crosses the wire once in total. The
+    dangling flag is static (a vertex with no out-edge never gains
+    one), so it rides the seed frame and each round reduces the
+    dangling mass with a filter over the rank frame. The mass is a
+    1-row broadcast folded into the plan, never a per-round collect.
+    (A variant that carried the dangling mass through the contribution
+    exchange as a NULL-sentinel row measured wat_host_pagerank 3.8 ->
+    6.5 s: it hangs the whole contribution aggregate under the
+    broadcast subquery.)"""
     vertices = (
         edges.select(F.col("s").alias("id"))
         .union(edges.select(F.col("t").alias("id")))
@@ -84,16 +61,12 @@ def pagerank(
         .persist().transform(track_cache)
     )
     n = vertices.count()
-    # out_deg re-joins the per-round dangling-mass anti-join on s —
-    # cache it pre-partitioned/pre-sorted like the adjacency (r15).
     out_deg = (
         edges.groupBy("s").agg(F.count("*").alias("deg"))
         .repartition("s").sortWithinPartitions("s")
         .persist().transform(track_cache)
     )
-    # Same O(E)-ships-once adjacency layout as pagerank_fixed (r8):
-    # degree attached once, cached pre-partitioned on the join key, so
-    # per-iteration only the O(V) rank frame shuffles.
+    base = (PAGERANK_SCALE * (100 - damping_pct)) // (100 * n)
     adj = (
         edges.join(out_deg, "s")
         .select("s", "t", "deg")
@@ -101,84 +74,79 @@ def pagerank(
         .sortWithinPartitions("s")
         .persist().transform(track_cache)
     )
-    adj.count()
-
-    # The DANGLING VERTEX SET is static across rounds (r15): vertices
-    # with no out-edge never gain one, so compute it once — a
-    # zero-exchange anti-join of the cached id-partitioned vertices
-    # against the s-partitioned out_deg — and per round reduce the
-    # dangling mass with a co-partitioned semi-join instead of
-    # re-running the anti-join against out_deg every round.
-    dangling_ids = (
-        vertices.join(out_deg, vertices.id == out_deg.s, "left_anti")
-        .persist().transform(track_cache)
-    )
-    ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        # Dangling mass as a 1-row DataFrame folded into the plan — a
-        # per-iteration `.collect()` here would double the job count.
-        dangling_df = (
-            ranks.join(dangling_ids, "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
+    adj.count()  # materialize the layout before the loop
+    seed = vertices
+    if not assume_no_dangling:
+        seed = (
+            vertices.join(out_deg, vertices.id == out_deg.s, "left")
+            .select("id", F.col("s").isNull().alias("dang"))
+            .sortWithinPartitions("id")
+            .persist().transform(track_cache)
         )
+    new_r = (
+        F.lit(base).cast("bigint")
+        + F.expr(f"({damping_pct} * inflow) div 100")
+    ).alias("r")
+    zero = F.lit(0).cast("bigint")
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             adj.join(ranks, adj.s == ranks.id)
-            .select(F.col("t").alias("id"), (F.col("rank") / F.col("deg")).alias("c"))
+            .select(F.col("t").alias("id"), F.expr("r div deg").alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        ranks = (
-            vertices.join(contribs, "id", "left")
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + damping
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
+        if assume_symmetric:
+            # every vertex has an in-edge: contribs is the vertex set
+            return contribs.select(
+                "id", F.col("contrib").alias("inflow")
+            ).select("id", new_r)
+        new = seed.join(contribs, "id", "left")
+        if assume_no_dangling:
+            return new.withColumn(
+                "inflow", F.coalesce("contrib", zero)
+            ).select("id", new_r)
+        dangling = ranks.filter("dang").agg(
+            F.coalesce(F.sum("r"), zero).alias("dangling")
         )
-        if (i + 1) % checkpoint_every == 0:
-            # truncate lineage; eager — see pagerank_fixed's r15
-            # negative result on the lazy variant
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+        return (
+            new.crossJoin(F.broadcast(dangling))
+            .withColumn(
+                "inflow",
+                F.coalesce("contrib", zero) + F.expr(f"dangling div {n}"),
+            )
+            .select("id", new_r, "dang")
+        )
+
+    return seed.withColumn("r", F.lit(PAGERANK_SCALE // n).cast("bigint")), step
 
 
-#: Fixed-point scale for :func:`pagerank_fixed` — 1.0 of rank mass is
-#: 10^15 units, leaving headroom to BIGINT overflow at
-#: damping_pct * mass = 100 * 10^15 << 2^63.
-PAGERANK_SCALE = 10**15
+def _with_rank(ranks: DataFrame) -> DataFrame:
+    return ranks.select(
+        "id", "r", (F.col("r") / F.lit(float(PAGERANK_SCALE))).alias("rank")
+    )
 
 
 def pagerank_fixed(
     edges: DataFrame,
     n_iter: int = 8,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
     assume_no_dangling: bool = False,
     assume_symmetric: bool = False,
 ) -> DataFrame:
-    """Bit-reproducible PageRank: the same damped power iteration as
-    :func:`pagerank`, carried out entirely in BIGINT fixed-point
-    arithmetic (rank mass scaled by ``PAGERANK_SCALE``).
+    """Bit-reproducible PageRank: damped power iteration carried out
+    entirely in BIGINT fixed-point arithmetic (rank mass scaled by
+    ``PAGERANK_SCALE``), edges(s, t) -> (id, r, rank).
 
-    Why a second implementation exists: floating-point ``SUM`` is
-    order-dependent, so the double-valued :func:`pagerank` can drift
-    in the last ulp between partitionings (and between engines).
-    Integer addition is associative — every sum here is exact no
-    matter how Spark splits or re-orders the partial aggregates, so
-    the result is identical run-to-run, cluster-to-cluster, and
-    engine-to-engine (a DuckDB recursive CTE replays it bit-for-bit;
-    see the ``graph_pagerank`` registered query). Each division floors
-    away strictly less than one fixed-point unit (10^-15 of total
-    mass), so after ``n_iter`` rounds total mass is short by at most
-    ``n_iter * (|E| + |V| + 1)`` units — immaterial, and itself
-    deterministic.
+    Floating-point ``SUM`` is order-dependent, so a double-valued
+    PageRank drifts in the last ulp between partitionings and engines.
+    Integer addition is associative: every sum here is exact however
+    Spark splits the partial aggregates, so the result is identical
+    run-to-run, cluster-to-cluster and engine-to-engine (a DuckDB
+    recursive CTE replays it bit-for-bit; see the ``graph_pagerank``
+    registered query). Each division floors away less than one unit
+    (10^-15 of total mass), so after ``n_iter`` rounds total mass is
+    short by at most ``n_iter * (|E| + |V| + 1)`` units.
 
     Update rule (all BIGINT, ``div`` = floor division):
 
@@ -187,165 +155,28 @@ def pagerank_fixed(
                   div 100
 
     with ``p = damping_pct``. ``assume_no_dangling=True`` skips the
-    per-iteration dangling-mass aggregate — valid when every vertex
-    has an out-edge (e.g. any symmetrized graph), where the term is
-    identically zero. ``assume_symmetric=True`` (implies
-    ``assume_no_dangling``) additionally asserts every vertex has an
-    IN-edge — true for any symmetrized graph — so the contribution
-    aggregate already covers every vertex and the per-round
-    zero-in-degree backfill join against the vertices frame is pure
-    overhead: the round becomes exactly one join against the cached
-    adjacency plus one keyed aggregation (r15 optimization round,
-    guide §2.1: shuffle/join work that reconstructs information the
-    aggregate already has). The emitted (id, r) multiset is identical
-    (contrib is never NULL when in-degree >= 1).
+    dangling-mass aggregate, valid when every vertex has an out-edge
+    (e.g. any symmetrized graph). ``assume_symmetric=True`` (implies
+    ``assume_no_dangling``) also asserts every vertex has an in-edge,
+    so the contribution aggregate already covers every vertex and the
+    per-round backfill join against the vertices frame is skipped.
 
-    Checkpoint cadence on the DANGLING path: each round's plan then
-    references the previous rank frame TWICE (contribution join +
-    dangling aggregate), so lineage doubles per round and the default
-    every-4 cadence hands Catalyst 2^4 copies of the subtree — pass
-    ``checkpoint_every=1`` for dangling graphs (wat_host_pagerank
-    measured 18 s -> 5.7 s at sf0.1 from that change alone). With
-    ``assume_no_dangling`` the reference count is 1 and the default
-    cadence is right.
+    Checkpoint cadence: on the dangling path each round's plan reads
+    the previous rank frame twice (contribution join + dangling
+    aggregate), so lineage doubles per round and the rank frame is
+    truncated every round (wat_host_pagerank measured 18 -> 5.7 s at
+    sf0.1 against every 4 rounds). Without the dangling term the frame
+    is read once and every 4 rounds is enough.
 
-    Returns (id, r BIGINT, rank DOUBLE = r / SCALE); ``rank`` is an
-    exact BIGINT→DOUBLE conversion, so it inherits the determinism.
+    ``rank`` is the exact BIGINT -> DOUBLE conversion of ``r``.
     """
-    if assume_symmetric:
-        assume_no_dangling = True
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py): every engine call site hands a persisted
-    # or checkpointed edge frame, so this count materializes work the
-    # vertices/adj cache builds would pay anyway. All loop arithmetic
-    # is BIGINT (associative), so the result is bit-identical under any
-    # partition count.
-    n_edges = edges.count()
-    with loop_shuffle(edges.sparkSession, n_edges, n_cols=3):
-        vertices = (
-            edges.select(F.col("s").alias("id"))
-            .union(edges.select(F.col("t").alias("id")))
-            .distinct()
-            .sortWithinPartitions("id")
-            .persist().transform(track_cache)
+    no_dangling = assume_no_dangling or assume_symmetric
+    with loop_shuffle(edges.sparkSession, edges.count(), n_cols=3):
+        ranks, step = _pagerank_setup(
+            edges, damping_pct, no_dangling, assume_symmetric
         )
-        n = vertices.count()
-        # out_deg re-joins the per-round dangling-mass anti-join on s —
-        # cache it pre-partitioned/pre-sorted like the adjacency (r15).
-        out_deg = (
-            edges.groupBy("s").agg(F.count("*").alias("deg"))
-            .repartition("s").sortWithinPartitions("s")
-            .persist().transform(track_cache)
-        )
-        base = (PAGERANK_SCALE * (100 - damping_pct)) // (100 * n)
-        # Degree rides the edge list (attached ONCE), and the adjacency
-        # is cached pre-partitioned on the join key: InMemoryRelation
-        # keeps its outputPartitioning, so every iteration's rank join
-        # reuses the cached layout and only the O(V) rank frame
-        # shuffles — the O(E) edge side crosses the wire once total,
-        # not twice per round (r8: this took the benched sf0.1 query
-        # from ~11.7 s to the contrib aggregation being the only
-        # per-round wide shuffle).
-        adj = (
-            edges.join(out_deg, "s")
-            .select("s", "t", "deg")
-            .repartition("s")
-            .sortWithinPartitions("s")
-            .persist().transform(track_cache)
-        )
-        adj.count()  # materialize the layout before the loop
-
-        # Static dangling-vertex FLAG carried on the vertices cache
-        # (r15 optimization round): vertices with no out-edge never
-        # gain one, so the per-round dangling-mass reduction is a
-        # filter+aggregate over the rank frame itself — the r15 build's
-        # separate dangling_ids cache plus per-round O(V) semi-join
-        # carried the same information as one extra boolean column does
-        # for free.
-        seed = vertices
-        if not assume_no_dangling:
-            seed = (
-                vertices.join(out_deg, vertices.id == out_deg.s, "left")
-                .select("id", F.col("s").isNull().alias("dang"))
-                .sortWithinPartitions("id")
-                .persist().transform(track_cache)
-            )
-        ranks = seed.withColumn(
-            "r", F.lit(PAGERANK_SCALE // n).cast("bigint")
-        )
-        new_r = (
-            F.lit(base).cast("bigint")
-            + F.expr(f"({damping_pct} * inflow) div 100")
-        ).alias("r")
-        for i in range(n_iter):
-            contribs = (
-                adj.join(ranks, adj.s == ranks.id)
-                .select(
-                    F.col("t").alias("id"), F.expr("r div deg").alias("c")
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            if assume_symmetric:
-                # Every vertex has an in-edge: contribs IS the full
-                # vertex set and contrib is never NULL — no backfill
-                # join.
-                ranks = contribs.select(
-                    "id", F.col("contrib").alias("inflow")
-                ).select("id", new_r)
-            elif assume_no_dangling:
-                ranks = (
-                    seed.join(contribs, "id", "left")
-                    .withColumn(
-                        "inflow",
-                        F.coalesce("contrib", F.lit(0).cast("bigint")),
-                    )
-                    .select("id", new_r)
-                )
-            else:
-                # Dangling mass as a 1-row broadcast folded into the
-                # plan (same shape as pagerank() — no per-iteration
-                # collect); filter over the flagged rank frame, no
-                # join. (An r15 NULL-sentinel variant that rode the
-                # dangling mass through the contribution exchange
-                # measured wat_host_pagerank 3.8 -> 6.5 s: with
-                # checkpoint_every=1 the old dangling scan reads a
-                # checkpoint for near-free, while the sentinel shape
-                # hangs the whole contribution aggregate under the
-                # broadcast subquery as well — don't re-try it.)
-                dangling_df = (
-                    ranks.filter("dang")
-                    .agg(
-                        F.coalesce(
-                            F.sum("r"), F.lit(0).cast("bigint")
-                        ).alias("dangling")
-                    )
-                )
-                ranks = (
-                    seed.join(contribs, "id", "left")
-                    .crossJoin(F.broadcast(dangling_df))
-                    .withColumn(
-                        "inflow",
-                        F.coalesce("contrib", F.lit(0).cast("bigint"))
-                        + F.expr(f"dangling div {n}"),
-                    )
-                    .select("id", new_r, "dang")
-                )
-            if (i + 1) % checkpoint_every == 0:
-                # NEGATIVE RESULT (r15 optimization round): eager=False
-                # here measured WORSE in a back-to-back sandwich A/B at
-                # sf0.1 (wat_host_pagerank 4.14 -> 4.74/5.10 s across
-                # two new-code arms; graph_pagerank straddled noise).
-                # On the dangling path each round's broadcast job then
-                # materializes the previous checkpoint inside the
-                # broadcast collect instead of a clean full-parallelism
-                # count job, and multi-reference rounds can compute
-                # unmaterialized checkpoint partitions concurrently
-                # from parallel stages. Keep eager.
-                ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(
-        "id", "r", (F.col("r") / F.lit(float(PAGERANK_SCALE))).alias("rank")
-    )
+        ranks = iterate(step, ranks, n_iter, every=4 if no_dangling else 1)
+    return _with_rank(ranks)
 
 
 def pagerank_converged(
@@ -357,231 +188,82 @@ def pagerank_converged(
     assume_no_dangling: bool = False,
     assume_symmetric: bool = False,
 ) -> DataFrame:
-    """Deployment wrapper for :func:`pagerank_fixed` (r11, completing
-    the converged family across every iterative operator:
-    cc_alternating_converged, kcore_converged, lpa_converged,
-    hits_converged): iterate the SAME all-BIGINT fixed-point update to
-    an L1 stop, with a ``max_rounds`` guard that RAISES.
+    """:func:`pagerank_fixed`'s update iterated to an L1 stop, with a
+    ``max_rounds`` guard that raises.
 
-    Stop rule: the probe compares the current frame against the one
-    from ``probe_every`` rounds ago and stops when the TOTAL moved
-    mass across that span is ``<= tol_units`` (default 10^9 units =
-    10^-6 of total rank mass) — a strictly stronger condition than a
-    single-step delta, so probing sparsely never stops early. Damped
-    power iteration is an affine contraction with factor
-    ``damping_pct/100`` in L1, so moved mass shrinks geometrically
-    REGARDLESS of graph structure — the stop fires within
-    ``log(mass/tol)/log(100/p)`` rounds (~85 at p=85 / tol=1e-6) and
-    the guard exists for the caller who tightens tol below the 1-unit
-    quantization floor. The probe is one O(V) join between
-    checkpointed rank frames -> a scalar, every ``probe_every``
-    rounds (default 4 = pagerank_fixed's checkpoint cadence, which
-    also truncates the dangling-mass fork's lineage before it can
-    replay multiplicatively), the connected_components trade. All arithmetic is
-    the bit-reproducible integer update of pagerank_fixed, so the
-    returned frame is identical across partitionings and runs.
+    Stop rule: every ``probe_every`` rounds the probe compares the
+    current frame with the one from the previous probe and stops when
+    the TOTAL moved mass across that span is ``<= tol_units`` (default
+    10^9 units = 10^-6 of total mass), a strictly stronger condition
+    than a single-step delta, so probing sparsely never stops early.
+    Damped power iteration is an affine contraction with factor
+    ``damping_pct/100`` in L1, so moved mass shrinks geometrically on
+    any graph and the stop fires within ``log(mass/tol)/log(100/p)``
+    rounds (~85 at p=85, tol=1e-6); the guard exists for a caller who
+    tightens tol below the 1-unit quantization floor. The probe is one
+    O(V) join between checkpointed rank frames -> a scalar.
 
-    Returns (id, r BIGINT, rank DOUBLE) like pagerank_fixed.
-    ``assume_symmetric`` has pagerank_fixed's semantics: every vertex
-    has an in-edge too, so the per-round backfill join is skipped.
+    Returns (id, r BIGINT, rank DOUBLE) like pagerank_fixed, identical
+    across partitionings and runs.
     """
-    if assume_symmetric:
-        assume_no_dangling = True
-    # Scale-adaptive loop partitioning — see pagerank_fixed (r15
-    # optimization round, operators/adaptive.py). The convergence
-    # probes and lazy checkpoints all run inside this scope, so every
-    # per-round exchange plans at the derived count.
-    n_edges = edges.count()
-    with loop_shuffle(edges.sparkSession, n_edges, n_cols=3):
-        vertices = (
-            edges.select(F.col("s").alias("id"))
-            .union(edges.select(F.col("t").alias("id")))
-            .distinct()
-            .sortWithinPartitions("id")
-            .persist().transform(track_cache)
+    no_dangling = assume_no_dangling or assume_symmetric
+    with loop_shuffle(edges.sparkSession, edges.count(), n_cols=3):
+        ranks, step = _pagerank_setup(
+            edges, damping_pct, no_dangling, assume_symmetric
         )
-        n = vertices.count()
-        # out_deg re-joins the per-round dangling-mass anti-join on s —
-        # cache it pre-partitioned/pre-sorted like the adjacency (r15).
-        out_deg = (
-            edges.groupBy("s").agg(F.count("*").alias("deg"))
-            .repartition("s").sortWithinPartitions("s")
-            .persist().transform(track_cache)
-        )
-        base = (PAGERANK_SCALE * (100 - damping_pct)) // (100 * n)
-        adj = (
-            edges.join(out_deg, "s")
-            .select("s", "t", "deg")
-            .repartition("s")
-            .sortWithinPartitions("s")
-            .persist().transform(track_cache)
-        )
-        adj.count()
-        # static dangling-vertex FLAG on the seed frame — see
-        # pagerank_fixed (r15 optimization round)
-        seed = vertices
-        if not assume_no_dangling:
-            seed = (
-                vertices.join(out_deg, vertices.id == out_deg.s, "left")
-                .select("id", F.col("s").isNull().alias("dang"))
-                .sortWithinPartitions("id")
-                .persist().transform(track_cache)
-            )
-        new_r = (
-            F.lit(base).cast("bigint")
-            + F.expr(f"({damping_pct} * inflow) div 100")
-        ).alias("r")
+        last = ranks = ranks.localCheckpoint(eager=True)
 
-        def one_round(ranks: DataFrame) -> DataFrame:
-            contribs = (
-                adj.join(ranks, adj.s == ranks.id)
-                .select(
-                    F.col("t").alias("id"), F.expr("r div deg").alias("c")
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            if assume_symmetric:
-                # Full in-coverage: contribs is the vertex set, no
-                # backfill join (pagerank_fixed's assume_symmetric
-                # rationale).
-                return contribs.select(
-                    "id", F.col("contrib").alias("inflow")
-                ).select("id", new_r)
-            new = seed.join(contribs, "id", "left")
-            if assume_no_dangling:
-                return new.withColumn(
-                    "inflow", F.coalesce("contrib", F.lit(0).cast("bigint"))
-                ).select("id", new_r)
-            # See pagerank_fixed's dangling note: the r15 NULL-sentinel
-            # variant measured a regression — the checkpointed rank
-            # scan here is near-free.
-            dangling_df = (
-                ranks.filter("dang")
-                .agg(
-                    F.coalesce(F.sum("r"), F.lit(0).cast("bigint")).alias(
-                        "dangling"
-                    )
-                )
-            )
-            return (
-                new.crossJoin(F.broadcast(dangling_df))
-                .withColumn(
-                    "inflow",
-                    F.coalesce("contrib", F.lit(0).cast("bigint"))
-                    + F.expr(f"dangling div {n}"),
-                )
-                .select("id", new_r, "dang")
-            )
-
-        def moved_mass(a: DataFrame, b: DataFrame) -> int:
+        def settled(new: DataFrame, _old: DataFrame) -> "DataFrame | None":
+            nonlocal last
             row = (
-                a.join(
-                    b.select(
+                new.join(
+                    last.select(
                         F.col("id").alias("id2"), F.col("r").alias("r2")
                     ),
-                    a.id == F.col("id2"),
+                    new.id == F.col("id2"),
                 )
                 .agg(F.sum(F.abs(F.col("r") - F.col("r2"))).alias("d"))
                 .collect()[0]
             )
-            return int(row["d"]) if row["d"] is not None else 0
+            if (row["d"] or 0) <= tol_units:
+                return _with_rank(new)
+            last = new
+            return None
 
-        ranks = seed.withColumn(
-            "r", F.lit(PAGERANK_SCALE // n).cast("bigint")
-        ).localCheckpoint(eager=True)
-        # last_probed only advances AT probe rounds, so the probe join
-        # really spans `probe_every` rounds (r11 ADVICE: reassigning
-        # `ranks` every round silently degraded the documented span
-        # probe to a single-step delta) and both sides of the join are
-        # always checkpointed frames.
-        last_probed = ranks
-        for i in range(max_rounds):
-            nxt = one_round(ranks)
-            if (i + 1) % probe_every == 0 or i == max_rounds - 1:
-                # Lazy checkpoint (r15 optimization round): the
-                # moved_mass action on the next line materializes it —
-                # eager=True ran a separate count() job first, doubling
-                # per-probe driver round-trips for the same computed
-                # bytes.
-                nxt = nxt.localCheckpoint(eager=False)
-                if moved_mass(nxt, last_probed) <= tol_units:
-                    return nxt.select(
-                        "id",
-                        "r",
-                        (F.col("r") / F.lit(float(PAGERANK_SCALE))).alias(
-                            "rank"
-                        ),
-                    )
-                last_probed = nxt
-            ranks = nxt
-    raise RuntimeError(
-        f"pagerank_converged: moved mass above {tol_units} units after "
-        f"{max_rounds} rounds"
-    )
+        return iterate(
+            step, ranks, max_rounds, every=probe_every, stop=settled,
+            guard=f"pagerank_converged: moved mass above {tol_units} units",
+        )
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 20,
-    checkpoint_every: int = 4,
-    probe_every: int = 4,
+    edges: DataFrame, max_iter: int = 20, probe_every: int = 4
 ) -> DataFrame:
-    """Undirected connected components by min-label propagation.
+    """Undirected connected components by min-label propagation ->
+    (id, component), component = min vertex id in the component.
 
-    → (id, component) where component = min vertex id in the component.
-    Each iteration: one shuffle (neighbor-min aggregation); converges in
-    O(graph diameter) rounds. The convergence probe (a join + count
-    driver action) runs only every `probe_every` iterations — at worst
-    `probe_every - 1` extra cheap iterations, in exchange for
-    `probe_every`× fewer driver round-trips.
+    Each round is one join + min-aggregation against the symmetric
+    adjacency; it converges in O(graph diameter) rounds. Every
+    ``probe_every`` rounds (and on the last) the labels are
+    checkpointed and compared with the previous round's; a round that
+    changes no label stops the loop. A graph whose diameter outruns
+    ``max_iter`` raises instead of returning labels that are not yet
+    components.
+
+    The adjacency carries one self-edge per vertex, so min over
+    N(u) ∪ {u} is the one join + aggregation (no second join to apply
+    least(own, neighbour-min)), and it is cached pre-partitioned on the
+    join key, so each round exchanges only the O(V) label frame. The
+    input is cut off its caller lineage first (:func:`truncate_lineage`:
+    the dedup callers feed an LSH pair pipeline in here).
+
+    The probe is a join against the PREVIOUS round, not a label-sum
+    checksum compared probe-to-probe: the checksum confirms a fixed
+    point one probe span later, and the extra rounds measured
+    curation_soft_dedup 2.70 -> 13.99 s at sf0.1.
     """
-    # Persisted: the adjacency is re-joined EVERY iteration — without
-    # this, an expensive edge lineage (e.g. minhash pair generation in
-    # dedup_cluster_canonical) is recomputed O(iterations) times.
-    # Cached PRE-PARTITIONED on the per-round join key (r15, guide
-    # §2.4 — the pagerank adj.repartition("s") discipline): the
-    # InMemoryRelation keeps hashpartitioning(t), so every round's
-    # neighbor-min join exchanges only the O(V) label frame; the O(E)
-    # adjacency crosses the wire once at cache build, not once per
-    # round.
-    #
-    # SELF-EDGES are folded into the cached frame (r15 optimization
-    # round): min over N(u) ∪ {u} of comp == least(comp(u),
-    # neighbor-min), so with (id, id) rows present the per-round
-    # update is the ONE join+aggregation — the old second SMJ that
-    # re-joined the old labels purely to apply least() carried no
-    # information the self-edge doesn't.
-    # The input lineage is read FOUR times building sym (forward +
-    # reversed legs, then the self-edge distinct reads both again).
-    # For callers whose edge frame is an expensive uncached pipeline
-    # (curation_pipeline_full / dedup_cluster_* feed the LSH pair join
-    # straight in here) that replayed the whole pair-generation plan
-    # 4x before the sym cache even built (r15 optimization round,
-    # guide §2.4 / §5: cache multi-consumer frames).
-    #
-    # Persist + localCheckpoint (r15 optimization round, guide
-    # §3.3/§5 — materialising an intermediate truncates the plan): a
-    # persist alone leaves the full caller lineage in the logical
-    # plan, so every downstream job here (sym build, each probe, the
-    # caller's final action) re-analyses and re-canonicalises the
-    # whole pair-generation subtree for the cache lookup — measured
-    # 6.5 s to materialise 81 edges and 5 s per probe at sf0.1 inside
-    # curation_pipeline_full; with the checkpoint truncating the
-    # lineage to a LogicalRDD the same decomposition reads 1.6 s /
-    # 0.34 s. The persist underneath keeps the pair generation
-    # plan-keyed so a rebuilt identical pipeline (bench warm runs)
-    # reuses the computed pairs instead of re-running them. Rows are
-    # identical (everything downstream is order-insensitive: union /
-    # distinct / min-agg).
-    base = _truncate_lineage(edges.select("s", "t"))
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py): base is an eager checkpoint, so the count
-    # is a scan of already-materialized local blocks. The dedup-cluster
-    # compositions feed a few-hundred-edge frame in here — at the conf
-    # count they paid 32 task launches per stage per round.
-    n_edges = base.count()
-    with loop_shuffle(base.sparkSession, n_edges, n_cols=2):
+    base = truncate_lineage(edges.select("s", "t"))
+    with loop_shuffle(base.sparkSession, base.count(), n_cols=2):
         sym = base.union(
             base.select(F.col("t").alias("s"), F.col("s").alias("t"))
         )
@@ -595,55 +277,34 @@ def connected_components(
             .distinct()
             .withColumn("comp", F.col("id"))
         )
-        for i in range(max_iter):
-            new_labels = (
-                sym.join(labels, sym.t == labels.id)
+
+        def step(lab: DataFrame) -> DataFrame:
+            return (
+                sym.join(lab, sym.t == lab.id)
                 .groupBy("s")
                 .agg(F.min("comp").alias("comp"))
                 .select(F.col("s").alias("id"), "comp")
             )
-            if (i + 1) % checkpoint_every == 0:
-                # Lazy: every call site keeps probe_every == checkpoint_
-                # every, so the changed-probe below materializes the
-                # checkpoint in the same job (r15 optimization round).
-                new_labels = new_labels.localCheckpoint(eager=False)
-            if (i + 1) % probe_every == 0 or i == max_iter - 1:
-                # NEGATIVE RESULT (r15 optimization round): replacing
-                # this join probe with an exact label-sum checksum
-                # (decimal(38,0) sum equality probe-to-probe; sound
-                # because the min-label update is monotone) measured
-                # correct but SLOWER in the same-conditions A/B:
-                # curation_soft_dedup 2.70 -> 13.99 s,
-                # dedup_cluster_histogram 2.58 -> 4.53 s at sf0.1 (sum
-                # arm on the LESS contended host). Sum equality
-                # compares probe-to-probe, so the first probe only
-                # seeds the baseline and a fixed point is confirmed one
-                # full probe span LATER than the join detects it —
-                # fast-converging dedup-cluster graphs pay extra label
-                # rounds, checkpoints and probe jobs that dwarf the
-                # join probe's plan-analysis saving. Do not re-try
-                # without changing the comparison to same-span (e.g.
-                # count changed via the join, which this is).
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "id")
-                    .filter(F.col("n.comp") != F.col("o.comp"))
-                    .limit(1)
-                    .count()
-                )
-                labels = new_labels
-                if changed == 0:
-                    break
-            else:
-                labels = new_labels
-    return labels.select("id", F.col("comp").alias("component"))
+
+        def settled(new: DataFrame, old: DataFrame) -> "DataFrame | None":
+            changed = (
+                new.alias("n")
+                .join(old.alias("o"), "id")
+                .filter(F.col("n.comp") != F.col("o.comp"))
+                .limit(1)
+                .count()
+            )
+            if changed:
+                return None
+            return new.select("id", F.col("comp").alias("component"))
+
+        return iterate(
+            step, labels, max_iter, every=probe_every, stop=settled,
+            guard="connected_components: labels still changing",
+        )
 
 
-def cc_alternating(
-    edges: DataFrame,
-    rounds: int = 6,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+def cc_alternating(edges: DataFrame, rounds: int = 6) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
 
@@ -654,9 +315,9 @@ def cc_alternating(
     drifting gradually) needs 10^6 shuffles — while star alternation
     contracts every tree toward its minimum by roughly squaring rank
     gaps, converging in O(log n) practical rounds (O(log^2 n) proven).
-    Each round is two grouped min-aggregations + joins over the
-    current edge multiset; edges only ever REWIRE toward smaller ids,
-    so the edge count never grows.
+    Each round is two grouped min-aggregations over the current edge
+    multiset; edges only ever REWIRE toward smaller ids, so the edge
+    count never grows.
 
     large-star(u): every neighbor v > u rewires to m = min(N(u) ∪ u).
     small-star(u): every neighbor v <= u (and u) rewires to that m.
@@ -664,58 +325,26 @@ def cc_alternating(
     component minima; the label of v is its star root (v itself for
     isolated roots).
 
-    The edge frame is referenced four times per round (symmetrize x2,
-    min-join x2), so the LOGICAL plan grows ~16x per round — lineage
-    MUST truncate every round (checkpoint_every=1); by round 3 an
-    untruncated tree overflows the planner stack. The materialized
-    work is unchanged (each round's edges compute once either way).
+    The edge frame is referenced four times per round, so the logical
+    plan grows ~16x per round and is truncated every round; by round 3
+    an untruncated tree overflows the planner stack.
 
     ``rounds`` is fixed (deterministic plan for the oracle twin);
     callers with unknown-diameter graphs should use
-    :func:`cc_alternating_converged`, which runs the fixed-point probe
-    (a round that changes nothing) with a max-rounds guard.
-    tests pin label equality with the propagation implementation on
-    random graphs and a 64-node path (an independent-algorithm
-    cross-check).
+    :func:`cc_alternating_converged`. Tests pin label equality with
+    the propagation implementation on random graphs and a 64-node path.
     """
     e, verts = _cc_normalize(edges)
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py): e is an eager checkpoint, so the count is
-    # a local-block scan; the star rounds' window/distinct exchanges
-    # all plan inside the scope (the per-round eager checkpoints are
-    # the loop's actions).
-    n_edges = e.count()
-    with loop_shuffle(e.sparkSession, n_edges, n_cols=2):
-        cur = e
-        for i in range(rounds):
-            cur = _star(_star(cur, large=True), large=False)
-            if (i + 1) % checkpoint_every == 0:
-                # NEGATIVE RESULT (r15 optimization round): eager=False
-                # measured +8-12% in both arms of a sandwich A/B
-                # (graph_cc_alternating 3.58 -> 4.01/3.88 s at sf0.1).
-                # The four per-round references sit under different
-                # exchanges, so parallel stages can compute
-                # unmaterialized checkpoint partitions concurrently —
-                # eager's one count() job materializes once at full
-                # parallelism. Keep eager.
-                cur = cur.localCheckpoint(eager=True)
+    with loop_shuffle(e.sparkSession, e.count(), n_cols=2):
+        cur = iterate(_star_round, e, rounds)
     return _cc_labels(cur, verts)
 
 
 def _cc_normalize(edges: DataFrame) -> "tuple[DataFrame, DataFrame]":
-    """Canonical (a < b) distinct edge set + vertex frame (the edge
-    frame seeds the round loop; vertices label the output).
-
-    The edge set is persisted AND localCheckpoint'ed (r15
-    optimization round — the connected_components rationale): callers
-    like graph_cc_alternating feed the LSH pair pipeline straight in,
-    and a persist alone leaves that whole subtree in the logical plan
-    for every downstream job (each star round seed, the vertex
-    distinct, the final label join) to re-analyse and re-canonicalise;
-    the checkpoint truncates it to a LogicalRDD while the plan-keyed
-    persist underneath keeps rebuilt pipelines warm. Rows are
-    identical."""
-    e = _truncate_lineage(
+    """Canonical (a < b) distinct edge set, cut off its caller lineage
+    (:func:`truncate_lineage`: graph_cc_alternating feeds the LSH pair
+    pipeline in here) + the vertex frame that labels the output."""
+    e = truncate_lineage(
         edges.select(
             F.least("s", "t").alias("a"), F.greatest("s", "t").alias("b")
         )
@@ -777,6 +406,10 @@ def _star(cur: DataFrame, large: bool) -> DataFrame:
     )
 
 
+def _star_round(cur: DataFrame) -> DataFrame:
+    return _star(_star(cur, large=True), large=False)
+
+
 def _cc_labels(cur: DataFrame, verts: DataFrame) -> DataFrame:
     # star forest -> labels: the min neighbor is the root; roots and
     # isolated vertices label themselves
@@ -803,44 +436,35 @@ def cc_alternating_converged(
     returns wrong labels on a deeper-than-expected graph).
 
     Fixed-point probe, per round: the canonical edge set is distinct
-    and only ever rewires toward smaller ids, so after checkpointing a
-    round's result the probe is one `count()` over cached data plus —
-    only when counts match — one `exceptAll` emptiness check.  The
-    count gate makes the common (still-contracting) rounds pay a
-    single cheap action; the exact set comparison only runs near
-    convergence.  Star alternation converges in O(log^2 n) rounds
-    proven / O(log n) practical, so `max_rounds=40` covers any graph
-    that fits in an exabyte; exhausting it means the input violates
-    the algorithm's contract (e.g. nondeterministic edge source) and
-    raises rather than returning silently-unconverged labels.
+    and only ever rewires toward smaller ids, so the probe is one
+    `count()` of the round's checkpoint plus — only when counts match —
+    one `exceptAll` emptiness check against the previous round. Star
+    alternation converges in O(log^2 n) rounds proven / O(log n)
+    practical, so `max_rounds=40` covers any graph that fits in an
+    exabyte; exhausting it means the input violates the algorithm's
+    contract (e.g. a nondeterministic edge source) and raises.
 
     Same output contract and label equality as :func:`cc_alternating`
     (pinned in tests on path graphs, random graphs, and the fixture's
-    near-dup clusters — including diameter-64 paths where a fixed
-    rounds=3 would be wrong).
+    near-dup clusters).
     """
     e, verts = _cc_normalize(edges)
-    cur = e  # already a localCheckpoint (_cc_normalize, r15)
-    n_cur = cur.count()
-    # Scale-adaptive loop partitioning derived from the count the
-    # fixed-point probe needs anyway (r15 optimization round, see
-    # operators/adaptive.py).
-    with loop_shuffle(e.sparkSession, n_cur, n_cols=2):
-        for _ in range(max_rounds):
-            # Lazy: the count() probe on the next line materializes the
-            # checkpoint in the same job (r15 optimization round).
-            nxt = _star(_star(cur, large=True), large=False).localCheckpoint(
-                eager=False
-            )
-            n_nxt = nxt.count()
-            if n_nxt == n_cur and cur.exceptAll(nxt).isEmpty():
-                return _cc_labels(nxt, verts)
-            cur, n_cur = nxt, n_nxt
-    raise RuntimeError(
-        f"cc_alternating_converged: no fixed point within {max_rounds} "
-        "rounds — star alternation converges in O(log^2 n); check the "
-        "edge source for nondeterminism"
-    )
+    n = e.count()
+    with loop_shuffle(e.sparkSession, n, n_cols=2):
+
+        def settled(new: DataFrame, old: DataFrame) -> "DataFrame | None":
+            nonlocal n
+            m = new.count()
+            if m == n and old.exceptAll(new).isEmpty():
+                return _cc_labels(new, verts)
+            n = m
+            return None
+
+        return iterate(
+            _star_round, e, max_rounds, stop=settled,
+            guard="cc_alternating_converged: no fixed point (check the "
+            "edge source for nondeterminism)",
+        )
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:
@@ -928,21 +552,13 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 
 
 def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_iter: int = 10,
-    checkpoint_every: int = 2,
-    directed: bool = False,
+    edges: DataFrame, sources: DataFrame, max_iter: int = 10
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from any vertex in
     `sources` — the reachability/radius primitive (seed-page distance,
     crawl-frontier depth) next to PageRank and connected components.
 
-    ``edges``: (s, t) pairs — symmetrized internally by default;
-    ``directed=True`` follows s->t arcs only (reverse the edge frame
-    at the call site for backward reachability), the primitive the
-    bowtie decomposition (wat_host_bowtie) is built from. Vertices in
-    either endpoint column count as vertices in both modes.
+    ``edges``: (s, t) pairs, followed in both directions.
     ``sources``: one column ``id``. Returns (id, hops BIGINT) for every
     vertex, hops = NULL when unreachable within ``max_iter``.
 
@@ -954,54 +570,87 @@ def bfs_hops(
     round; 2.5x slower at sf0.1 already). Rounds past exhaustion join
     an empty frontier and cost nothing, so a fixed max_iter stays
     exact — what lets a DuckDB recursive CTE replay it for the
-    graph_bfs_hops oracle. All-integer min labels keep results
-    bit-identical across partitionings.
+    graph_bfs_hops oracle. Settled and frontier frames are truncated
+    every 2 rounds; the frontier shrinks toward exhaustion, so the
+    loop keeps AQE (operators/adaptive.py).
     """
-    if directed:
-        # Arcs as given; vertices still drawn from BOTH endpoint
-        # columns so sink-only vertices appear (with NULL hops when
-        # unreached) exactly as in the undirected mode.
-        sym = edges.select("s", "t").persist().transform(track_cache)
-        verts = (
-            sym.select(F.col("s").alias("id"))
-            .union(sym.select(F.col("t").alias("id")))
-            .distinct()
-        )
-    else:
-        sym = edges.select("s", "t").union(
-            edges.select(F.col("t").alias("s"), F.col("s").alias("t"))
-        ).persist().transform(track_cache)
-        verts = sym.select(F.col("s").alias("id")).distinct()
-    # Scale-adaptive loop partitioning (r15 optimization round, see
-    # operators/adaptive.py): the count materializes the sym persist —
-    # work round 1 would pay — and the per-round eager checkpoints all
-    # plan inside the scope. Min labels are integers, bit-identical
-    # under any partitioning.
-    # aqe="on": the frontier SHRINKS toward exhaustion, so AQE's
-    # runtime SMJ -> broadcast conversion of the frontier joins is the
-    # kcore situation, not the pagerank one (operators/adaptive.py).
-    n_edges = sym.count()
-    with loop_shuffle(sym.sparkSession, n_edges, n_cols=2, aqe="on"):
+    sym = edges.select("s", "t").union(
+        edges.select(F.col("t").alias("s"), F.col("s").alias("t"))
+    ).persist().transform(track_cache)
+    verts = sym.select(F.col("s").alias("id")).distinct()
+    with loop_shuffle(sym.sparkSession, sym.count(), n_cols=2, aqe="on"):
         settled = sources.select(
             "id", F.lit(0).cast("bigint").alias("hops")
         ).join(verts, "id", "left_semi").persist().transform(track_cache)
-        frontier = settled
-        for i in range(max_iter):
-            # Propagate hop(t) = min hop(s) + 1 along s->t arcs (for
-            # the symmetrized frame both orientations are present, so
-            # this is bit-identical to the historical t->s
-            # formulation).
+
+        def step(
+            state: "tuple[DataFrame, DataFrame]",
+        ) -> "tuple[DataFrame, DataFrame]":
+            settled, frontier = state
             cand = (
                 sym.join(frontier, sym.s == frontier.id)
                 .groupBy(F.col("t").alias("id"))
                 .agg((F.min("hops") + F.lit(1)).cast("bigint").alias("hops"))
             )
             frontier = cand.join(settled, "id", "left_anti")
-            settled = settled.union(frontier)  # disjoint by construction
-            if (i + 1) % checkpoint_every == 0:
-                settled = settled.localCheckpoint(eager=True)
-                frontier = frontier.localCheckpoint(eager=True)
+            return settled.union(frontier), frontier  # disjoint
+
+        settled, _ = iterate(step, (settled, settled), max_iter, every=2)
     return verts.join(settled, "id", "left").select("id", "hops")
+
+
+def _hits_spread(e: DataFrame, frame: DataFrame, src: str, dst: str) -> DataFrame:
+    """Sum ``frame``'s scores over edges ``src -> dst``, keyed by dst."""
+    return (
+        e.join(frame, e[src] == frame.id)
+        .groupBy(dst)
+        .agg(F.sum("v").cast("bigint").alias("v"))
+        .select(F.col(dst).alias("id"), "v")
+    )
+
+
+def _hits_round(
+    e_s: DataFrame, e_t: DataFrame, hub: DataFrame,
+    post: Callable[[DataFrame], DataFrame],
+) -> "tuple[DataFrame, DataFrame]":
+    """One HITS round shared by :func:`hits_fixed` and
+    :func:`hits_converged`: auth from hub over in-edges, then hub from
+    auth over out-edges. ``post`` (a lazy checkpoint, or the fixed-point
+    rescale ending in one) runs on each half, so the hub half reads a
+    truncated auth frame; the round therefore truncates twice and is
+    run by a plain loop rather than ``iterate``."""
+    auth = post(_hits_spread(e_s, hub, "s", "t"))
+    return auth, post(_hits_spread(e_t, auth, "t", "s"))
+
+
+def _hits_layouts(base: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """The edge frame cached twice, pre-partitioned on each join key
+    (the rounds alternate join sides), so every per-round join reuses a
+    cached layout and only the score frame moves. e_t re-reads the e_s
+    cache, so an uncached edge pipeline computes once."""
+    e_s = base.repartition("s").sortWithinPartitions("s").persist().transform(track_cache)
+    e_t = e_s.repartition("t").sortWithinPartitions("t").persist().transform(track_cache)
+    return e_s, e_t
+
+
+def _hits_scores(
+    auth: DataFrame, hub: DataFrame,
+    norm: Callable[[DataFrame], "tuple[DataFrame, Column]"],
+) -> DataFrame:
+    """(id, kind, score_fp, score) for both kinds; ``norm(frame)``
+    returns the frame and the column that score_fp is divided by."""
+    out = []
+    for kind, frame in (("auth", auth), ("hub", hub)):
+        frame, denom = norm(frame)
+        out.append(
+            frame.select(
+                "id",
+                F.lit(kind).alias("kind"),
+                F.col("v").alias("score_fp"),
+                (F.col("v").cast("double") / denom).alias("score"),
+            )
+        )
+    return out[0].unionAll(out[1])
 
 
 def hits_fixed(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -1022,73 +671,29 @@ def hits_fixed(edges: DataFrame, rounds: int = 2) -> DataFrame:
     double is engine-identical).
 
     Per round: two shuffles (one keyed by target, one by source) over
-    the O(V) score frame against the cached edge frame — the PageRank
-    ship-edges-once discipline. The rounds alternate join sides, so
-    the edge frame is cached TWICE, pre-partitioned on each join key
-    (r15, guide §2.4): every per-round join then reuses a cached
-    layout and only the score frame (already partitioned by the
-    previous regroup) moves — the old single unpartitioned cache
-    re-exchanged O(E) edges on every join.
-
-    Deliberately NOT scale-adaptive-partitioned (r15 optimization
-    round, operators/adaptive.py): the fixed-round body runs NO
-    internal action — the whole plan executes at the caller's action,
-    after a loop_shuffle scope would already be restored — so shrinking
-    only the caches would ADD one exchange per round (the score frame,
-    partitioned at the conf count by its regroup, would stop
-    co-partitioning with a smaller cache). hits_converged, whose
-    per-round probes plan inside the scope, is the adaptive variant.
+    the O(V) score frame against the cached edge layouts. The loop runs
+    no action of its own, so it takes no loop_shuffle scope
+    (operators/adaptive.py), and its lazy checkpoints are materialised
+    by the final normalization or the caller's action.
     """
-    base = edges.select("s", "t")
-    e_s = base.repartition("s").sortWithinPartitions("s").persist().transform(track_cache)
-    # e_t re-reads the e_s CACHE, not the caller's edge frame (r15
-    # optimization round, guide §2.4/§5): same rows, second layout —
-    # an expensive uncached edge pipeline computes once, not twice.
-    e_t = e_s.repartition("t").sortWithinPartitions("t").persist().transform(track_cache)
+    e_s, e_t = _hits_layouts(edges.select("s", "t"))
     # round 1 auth: hub0 = 1 everywhere -> auth1(v) = in-degree
     auth = (
         e_t.groupBy("t")
         .agg(F.count("*").cast("bigint").alias("v"))
         .select(F.col("t").alias("id"), "v")
     )
-    hub = (
-        e_t.join(auth, e_t.t == auth.id)
-        .groupBy("s")
-        .agg(F.sum("v").cast("bigint").alias("v"))
-        .select(F.col("s").alias("id"), "v")
-    )
+    hub = _hits_spread(e_t, auth, "t", "s")
     for _ in range(rounds - 1):
-        auth = (
-            e_s.join(hub, e_s.s == hub.id)
-            .groupBy("t")
-            .agg(F.sum("v").cast("bigint").alias("v"))
-            .select(F.col("t").alias("id"), "v")
-            # Lazy (r15): the final-normalization max broadcast (or the
-            # caller's action) materializes each frame once; eager=True
-            # paid one count() job per checkpoint for the same bytes.
-            .localCheckpoint(eager=False)
+        auth, hub = _hits_round(
+            e_s, e_t, hub, lambda f: f.localCheckpoint(eager=False)
         )
-        hub = (
-            e_t.join(auth, e_t.t == auth.id)
-            .groupBy("s")
-            .agg(F.sum("v").cast("bigint").alias("v"))
-            .select(F.col("s").alias("id"), "v")
-            .localCheckpoint(eager=False)
-        )
-    out = []
-    for kind, frame in (("auth", auth), ("hub", hub)):
+
+    def by_max(frame: DataFrame) -> "tuple[DataFrame, Column]":
         mx = frame.agg(F.max("v").alias("mx"))
-        out.append(
-            frame.crossJoin(F.broadcast(mx)).select(
-                "id",
-                F.lit(kind).alias("kind"),
-                F.col("v").alias("score_fp"),
-                (F.col("v").cast("double") / F.col("mx").cast("double")).alias(
-                    "score"
-                ),
-            )
-        )
-    return out[0].unionAll(out[1])
+        return frame.crossJoin(F.broadcast(mx)), F.col("mx").cast("double")
+
+    return _hits_scores(auth, hub, by_max)
 
 
 def hits_converged(
@@ -1096,52 +701,37 @@ def hits_converged(
     scale_bits: int = 20,
     max_rounds: int = 32,
 ) -> DataFrame:
-    """Deployment wrapper for :func:`hits_fixed` (r11, completing the
-    converged family: cc_alternating_converged, kcore_converged,
-    lpa_converged): QUANTIZED power iteration run to an exact integer
-    fixed point, with a ``max_rounds`` guard that RAISES.
+    """:func:`hits_fixed`'s power iteration QUANTIZED and run to an
+    exact integer fixed point, with a ``max_rounds`` guard that RAISES.
 
     Raw HITS scores grow as deg^(2*rounds) — exact integer arithmetic
     overflows after a handful of rounds, and the normalized vector
     converges to an (irrational) eigenvector, so a float L1 threshold
     would reintroduce partition-order nondeterminism. Instead each
-    round renormalizes IN FIXED POINT: after every hub/auth sum the
-    frame rescales to ``floor(v * 2^scale_bits / max(v))`` — all-BIGINT
-    arithmetic (the multiply is split ``(v div m)*S + ((v mod m)*S)
-    div m`` so no intermediate exceeds ``max_raw * 2^scale_bits``,
-    inside int64 for max weighted degree < 2^(63 - scale_bits)).
-    Quantization makes the iterate a deterministic map on a FINITE
-    state space, so geometric eigenvector convergence reaches an exact
-    integer rest state in finitely many rounds: the stop probe is
-    L-infinity delta <= 1 ulp on BOTH frames (the 1-ulp tolerance
-    absorbs the adjacent-level flicker a floor can oscillate between),
-    one O(V) join between checkpointed frames per round — the
-    lpa_converged discipline.
+    half-round renormalizes IN FIXED POINT: the frame rescales to
+    ``floor(v * 2^scale_bits / max(v))`` — all-BIGINT arithmetic (the
+    multiply is split ``(v div m)*S + ((v mod m)*S) div m`` so no
+    intermediate exceeds ``max_raw * 2^scale_bits``, inside int64 for
+    max weighted degree < 2^(63 - scale_bits)). Quantization makes the
+    iterate a deterministic map on a FINITE state space, so geometric
+    eigenvector convergence reaches an exact integer rest state in
+    finitely many rounds: the stop probe is L-infinity delta <= 1 ulp
+    on BOTH frames (the 1-ulp tolerance absorbs the adjacent-level
+    flicker a floor can oscillate between), both deltas in one action
+    over checkpointed frames, from round 2 on.
 
     Returns (id, kind, score_fp, score) like hits_fixed: score_fp is
     the fixed-point integer (max = 2^scale_bits by construction),
-    score = score_fp / 2^scale_bits. Agreement with hits_fixed's
-    normalized scores at the fixture's fixed point is pinned in
-    tests/test_community.py-style tolerance tests; the wrapper itself
-    is bit-deterministic across partitionings.
+    score = score_fp / 2^scale_bits, bit-deterministic across
+    partitionings. The round truncates twice (once per half), so this
+    loop is written out rather than run by ``iterate``.
     """
     scale = 1 << scale_bits
-    # Two pre-partitioned caches, one per join side (r15 — same
-    # rationale as hits_fixed): the converged loop joins on s then t
-    # EVERY round until the fixed point, so the per-round O(E)
-    # re-exchange the single unpartitioned cache paid is multiplied
-    # by the round count here.
-    #
-    # base is persisted so the scale-adaptive partition count (see
-    # operators/adaptive.py) can be derived from a measured row count
-    # without re-running the caller's edge pipeline: the count
-    # materializes the pipeline once into this cache and the e_s/e_t
-    # layout caches read it back.
+    # persisted so the loop's partition count can come from a measured
+    # row count without re-running the caller's edge pipeline
     base = edges.select("s", "t").persist().transform(track_cache)
-    n_edges = base.count()
-    with loop_shuffle(base.sparkSession, n_edges, n_cols=2):
-        e_s = base.repartition("s").sortWithinPartitions("s").persist().transform(track_cache)
-        e_t = e_s.repartition("t").sortWithinPartitions("t").persist().transform(track_cache)
+    with loop_shuffle(base.sparkSession, base.count(), n_cols=2):
+        e_s, e_t = _hits_layouts(base)
 
         def rescale(frame: DataFrame) -> DataFrame:
             mx = frame.agg(F.max("v").alias("m"))
@@ -1153,24 +743,14 @@ def hits_converged(
                         f"(v DIV m) * {scale}L + ((v % m) * {scale}L) DIV m"
                     ).alias("v"),
                 )
-                # Lazy checkpoint (r15 optimization round): the
-                # per-round linf2 probe action materializes both
-                # rescaled frames in ONE job — eager=True paid two
-                # extra count() jobs per round for the same computed
-                # bytes.
+                # lazy: the round's probe action materializes it
                 .localCheckpoint(eager=False)
             )
 
         def linf2(
             a: DataFrame, pa: DataFrame, h: DataFrame, ph: DataFrame
         ) -> int:
-            """max(L-inf(auth delta), L-inf(hub delta)) in ONE driver
-            action (r15): the two per-round probe joins used to run as
-            two separate collect() jobs; unioning the joined delta
-            frames before the 1-row max halves the per-round driver
-            round-trips without changing the <= 1 stop rule (it fires
-            iff both deltas are <= 1, exactly as the two-probe AND
-            did)."""
+            """max(L-inf(auth delta), L-inf(hub delta)) in one action."""
 
             def deltas(x: DataFrame, px: DataFrame) -> DataFrame:
                 return x.join(
@@ -1190,95 +770,14 @@ def hits_converged(
 
         verts_s = e_s.select(F.col("s").alias("id")).distinct()
         hub = verts_s.select("id", F.lit(scale).cast("bigint").alias("v"))
-        prev_auth = prev_hub = None
+        prev = None
         for _ in range(max_rounds):
-            auth = rescale(
-                e_s.join(hub, e_s.s == hub.id)
-                .groupBy("t")
-                .agg(F.sum("v").cast("bigint").alias("v"))
-                .select(F.col("t").alias("id"), "v")
-            )
-            nxt_hub = rescale(
-                e_t.join(auth, e_t.t == auth.id)
-                .groupBy("s")
-                .agg(F.sum("v").cast("bigint").alias("v"))
-                .select(F.col("s").alias("id"), "v")
-            )
-            if (
-                prev_auth is not None
-                and linf2(auth, prev_auth, nxt_hub, prev_hub) <= 1
-            ):
-                out = []
-                for kind, frame in (("auth", auth), ("hub", nxt_hub)):
-                    out.append(
-                        frame.select(
-                            "id",
-                            F.lit(kind).alias("kind"),
-                            F.col("v").alias("score_fp"),
-                            (
-                                F.col("v").cast("double")
-                                / F.lit(float(scale))
-                            ).alias("score"),
-                        )
-                    )
-                return out[0].unionAll(out[1])
-            prev_auth, prev_hub, hub = auth, nxt_hub, nxt_hub
+            auth, nxt = _hits_round(e_s, e_t, hub, rescale)
+            if prev is not None and linf2(auth, prev[0], nxt, prev[1]) <= 1:
+                return _hits_scores(
+                    auth, nxt, lambda f: (f, F.lit(float(scale)))
+                )
+            prev, hub = (auth, nxt), nxt
     raise RuntimeError(
         f"hits_converged: no integer fixed point within {max_rounds} rounds"
-    )
-
-
-def bowtie_decomposition(
-    edges: DataFrame,
-    pivot: DataFrame | None = None,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Broder bowtie structure of a DIRECTED graph around a pivot
-    (Broder et al. 2000, "Graph structure in the Web"): CORE = the
-    pivot's strongly connected component (forward- AND backward-
-    reachable), IN = reaches the core but not reached by it, OUT =
-    reached but not reaching, OTHER = neither (tendrils/tubes/
-    disconnected need path-through-core analysis the host report
-    doesn't, so they stay one bucket).
-
-    This is the FW-BW step of the classic parallel SCC algorithm: two
-    directed multi-source BFS sweeps (:func:`bfs_hops` with
-    ``directed=True``; the backward sweep runs on the reversed edge
-    frame) and one join — per sweep, one frontier shuffle per level,
-    so the whole report is ~2*diameter bounded-size shuffles over the
-    vertex frame. `max_iter` must be >= the graph diameter for the
-    classification to be exact (frontier BFS rounds past exhaustion
-    join an empty frontier and cost nothing, so overshooting is free
-    — same discipline as the graph_bfs_hops oracle).
-
-    ``pivot``: one-column ``id`` frame; defaults to the minimum
-    source vertex (deterministic, and a source always has its
-    self-SCC in CORE). Returns (id, cls, fwd_hops, bwd_hops) for
-    every vertex; hops are NULL outside the respective reachable
-    sets.
-
-    Reference anchor: hostlinks_to_graph.py builds the directed host
-    graph this decomposes; the reference runs no structure analytics.
-    """
-    e = edges.select("s", "t").persist().transform(track_cache)
-    if pivot is None:
-        pivot = e.agg(F.min("s").alias("id"))
-    fwd = bfs_hops(e, pivot, max_iter=max_iter, directed=True).select(
-        "id", F.col("hops").alias("fwd_hops")
-    )
-    rev = e.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    bwd = bfs_hops(rev, pivot, max_iter=max_iter, directed=True).select(
-        "id", F.col("hops").alias("bwd_hops")
-    )
-    cls = (
-        F.when(
-            F.col("fwd_hops").isNotNull() & F.col("bwd_hops").isNotNull(),
-            F.lit("core"),
-        )
-        .when(F.col("bwd_hops").isNotNull(), F.lit("in"))
-        .when(F.col("fwd_hops").isNotNull(), F.lit("out"))
-        .otherwise(F.lit("other"))
-    )
-    return fwd.join(bwd, "id", "full").select(
-        "id", cls.alias("cls"), "fwd_hops", "bwd_hops"
     )

@@ -840,9 +840,7 @@ def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(cleaned, threshold=0.5)
     edges = pairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("t"))
     # Near-dup clusters are near-cliques (diameter ~1-2) — probe early.
-    comp = connected_components(
-        edges, max_iter=12, probe_every=2, checkpoint_every=2
-    )
+    comp = connected_components(edges, max_iter=12, probe_every=2)
     surv = (
         cleaned.join(comp, cleaned.doc_id == comp.id, "left")
         .filter(

@@ -1024,7 +1024,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("t"))
     # Near-dup clusters are near-cliques: diameter ~1-2, so probe for
     # convergence every 2 rounds instead of the graph default of 4.
-    comp = connected_components(edges, max_iter=12, probe_every=2, checkpoint_every=2)
+    comp = connected_components(edges, max_iter=12, probe_every=2)
     docs = t.documents.select("doc_id")
     return (
         docs.join(comp, docs.doc_id == comp.id, "left")

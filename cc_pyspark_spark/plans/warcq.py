@@ -581,33 +581,13 @@ FROM pr WHERE iter = {_HOST_PR_ITER}
     tags=("source", "warc", "graph", "scale"),
 )
 def wat_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cc_pyspark_spark.caching import track_cache  # noqa: PLC0415
+    from cc_pyspark_spark.operators.adaptive import truncate_lineage  # noqa: PLC0415
     from cc_pyspark_spark.operators.pagerank import pagerank_fixed  # noqa: PLC0415
 
-    # Persist + localCheckpoint (r15 optimization round, guide
-    # §3.3/§5): pagerank_fixed derives vertices, out-degrees, AND the
-    # adjacency from the edge frame — uncached, the full .wat.gz parse
-    # would re-run for each derivation (measured 3x at sf0.1). The
-    # persist bounds the COMPUTE to one pass (and is plan-keyed, so a
-    # rebuilt identical pipeline reuses it); the checkpoint on top
-    # truncates the WAT parse subtree out of the logical plan, which
-    # every downstream job (cache builds, per-round checkpoints,
-    # dangling broadcasts, the final action) otherwise re-analyses and
-    # re-canonicalises. A checkpoint ALONE measured worse (5.5 ->
-    # 7.7 s shuffle-contended): unlike the persist it is not
-    # plan-keyed, so every rebuilt pipeline re-ran the parse.
-    edges = (
-        wat_links_host_graph(spark, sf_dir)
-        .persist().transform(track_cache)
-        .localCheckpoint(eager=True)
-    )
-    # checkpoint_every=1: on the DANGLING path each round's plan
-    # references the previous rank frame twice (contribution join +
-    # dangling aggregate), so lineage doubles per round — the default
-    # every-4 cadence carries 2^4 copies of the subtree into Catalyst
-    # and the row read ~18 s at sf0.1; per-round truncation of the
-    # O(hosts)-row frame is trivial and bounds plan growth linearly.
-    ranked = pagerank_fixed(
-        edges, n_iter=_HOST_PR_ITER, damping_pct=85, checkpoint_every=1
-    )
+    # pagerank_fixed derives vertices, out-degrees AND the adjacency
+    # from the edge frame: uncached, the .wat.gz parse would re-run for
+    # each derivation (measured 3x at sf0.1), and every downstream job
+    # would re-analyse the parse subtree.
+    edges = truncate_lineage(wat_links_host_graph(spark, sf_dir))
+    ranked = pagerank_fixed(edges, n_iter=_HOST_PR_ITER, damping_pct=85)
     return ranked.select(F.col("id").alias("host"), "r", "rank")

@@ -66,9 +66,7 @@ def main() -> int:
         comp = timed(
             spark,
             "4 connected components",
-            lambda: connected_components(
-                edges, max_iter=12, probe_every=2, checkpoint_every=2
-            ),
+            lambda: connected_components(edges, max_iter=12, probe_every=2),
         )
         surv = (
             cleaned.join(comp, cleaned.doc_id == comp.id, "left")

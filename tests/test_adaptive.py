@@ -10,7 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 import cc_pyspark_spark.operators.adaptive as adaptive
-from cc_pyspark_spark.operators.adaptive import loop_partitions, loop_shuffle
+from cc_pyspark_spark.operators.adaptive import (
+    iterate,
+    loop_partitions,
+    loop_shuffle,
+)
 
 
 def test_loop_partitions_floor_cap_and_scaling(spark):
@@ -42,12 +46,10 @@ def test_loop_shuffle_sets_and_restores(spark):
     assert spark.conf.get(key) == before
 
 
-def test_loop_shuffle_aqe_scope(spark, monkeypatch):
+def test_loop_shuffle_aqe_scope(spark):
     """r16: aqe="off" (default) disables AQE inside the scope and
-    restores it; aqe="on" keeps it; SPARK_GRAFT_LOOP_AQE overrides the
-    parameter (the A/B probe knob)."""
+    restores it; aqe="on" keeps it."""
     key = "spark.sql.adaptive.enabled"
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
     before = spark.conf.get(key)
     with loop_shuffle(spark, 1, n_cols=2):
         assert spark.conf.get(key) == "false"
@@ -55,47 +57,30 @@ def test_loop_shuffle_aqe_scope(spark, monkeypatch):
     with loop_shuffle(spark, 1, n_cols=2, aqe="on"):
         assert spark.conf.get(key) == before
     assert spark.conf.get(key) == before
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "on")
-    with loop_shuffle(spark, 1, n_cols=2):
-        assert spark.conf.get(key) == before
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "off")
-    with loop_shuffle(spark, 1, n_cols=2, aqe="on"):
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == before
 
 
-def test_loop_shuffle_aqe_mode_is_case_normalised_and_validated(
-    spark, monkeypatch
-):
+def test_loop_shuffle_aqe_mode_is_case_normalised_and_validated(spark):
     key = "spark.sql.adaptive.enabled"
     shuffle_key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     before_shuffle = spark.conf.get(shuffle_key)
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", " ON ")
-    with loop_shuffle(spark, 1, n_cols=2):
+    with loop_shuffle(spark, 1, n_cols=2, aqe=" ON "):
         assert spark.conf.get(key) == before
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "Off")
-    with loop_shuffle(spark, 1, n_cols=2, aqe="on"):
+    with loop_shuffle(spark, 1, n_cols=2, aqe="Off"):
         assert spark.conf.get(key) == "false"
     assert spark.conf.get(key) == before
     # anything else fails loudly, before the session conf is touched
-    for bad in ("true", "1", ""):
-        monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_LOOP_AQE"):
-            with loop_shuffle(spark, 1, n_cols=2):
+    for bad in ("auto", "true", "1", ""):
+        with pytest.raises(ValueError, match="'on' or 'off'"):
+            with loop_shuffle(spark, 1, n_cols=2, aqe=bad):
                 pass
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE")
-    with pytest.raises(ValueError):
-        with loop_shuffle(spark, 1, n_cols=2, aqe="auto"):
-            pass
     assert spark.conf.get(key) == before
     assert spark.conf.get(shuffle_key) == before_shuffle
 
 
-def test_loop_shuffle_restores_when_entering_the_scope_fails(spark, monkeypatch):
+def test_loop_shuffle_restores_when_entering_the_scope_fails(spark):
     """A conf.set that fails while the scope is entered must not leak
     the overrides already applied."""
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
     key = "spark.sql.shuffle.partitions"
     aqe_key = "spark.sql.adaptive.enabled"
 
@@ -161,3 +146,45 @@ def test_loop_operators_invariant_to_derived_count(spark, monkeypatch):
     monkeypatch.setattr(adaptive, "LOOP_TARGET_BYTES", 1 << 30)  # derive 1
     at_one = run_all()
     assert at_cap == at_one
+
+
+class _Frame:
+    """Stands in for a loop-state frame; records its checkpoint kind."""
+
+    def __init__(self, n, kind=None):
+        self.n, self.kind = n, kind
+
+    def localCheckpoint(self, eager=True):
+        return _Frame(self.n, "eager" if eager else "lazy")
+
+
+def test_iterate_checkpoint_schedule_probes_and_guard():
+    """The driver's rule: eager checkpoints every `every` rounds in a
+    fixed loop; in a converged loop the probed rounds (every `every`-th
+    and the last) are checkpointed lazily, the probe sees the previous
+    round's state, and running out of rounds raises."""
+    seen = []
+
+    def step(state):
+        seen.append(state[0].kind)  # how the previous round was cut
+        return (_Frame(state[0].n + 1),)
+
+    out = iterate(step, (_Frame(0),), 6, every=4)
+    assert seen[1:] == [None, None, None, "eager", None]
+    assert (out[0].n, out[0].kind) == (6, None)
+
+    seen.clear()
+    probes = []
+
+    def never(new, old):
+        probes.append((new[0].n, new[0].kind, old[0].n))
+
+    with pytest.raises(RuntimeError, match="^nope after 5 rounds$"):
+        iterate(step, (_Frame(0),), 5, every=2, stop=never, guard="nope")
+    assert probes == [(2, "lazy", 1), (4, "lazy", 3), (5, "lazy", 4)]
+    assert seen[1:] == [None, "lazy", None, "lazy"]
+
+    def at_three(new, old):
+        return "result" if new[0].n == 3 else None
+
+    assert iterate(step, (_Frame(0),), 9, stop=at_three) == "result"

@@ -1,4 +1,5 @@
-"""Fixed-point PageRank: bit-reproducibility + parity with float math.
+"""Fixed-point PageRank: bit-reproducibility + parity with float math,
+and BFS hop counts.
 
 pagerank_fixed carries the repo's only iterative-algorithm value-hash
 oracle (registered query graph_pagerank); these tests pin the two
@@ -17,7 +18,6 @@ import pytest
 
 from cc_pyspark_spark.operators.pagerank import (
     PAGERANK_SCALE,
-    pagerank,
     pagerank_fixed,
 )
 from tests.test_pagerank import EDGES, _numpy_pagerank
@@ -68,12 +68,13 @@ def test_fixed_point_partition_invariance(spark):
 
 
 def test_fixed_tracks_float_variant(spark):
-    """Fixed-point and double implementations iterate the same rule;
-    on a dangling-free graph they agree far beyond rank-ordering."""
+    """The fixed-point no-dangling path and double power iteration
+    (numpy) iterate the same rule; on a dangling-free graph they agree
+    far beyond rank-ordering."""
     edges = spark.createDataFrame(SYM_EDGES, "s long, t long")
     fx = {r["id"]: r["rank"] for r in pagerank_fixed(
         edges, n_iter=8, assume_no_dangling=True).collect()}
-    fl = {r["id"]: r["rank"] for r in pagerank(edges, n_iter=8).collect()}
+    fl = _numpy_pagerank(SYM_EDGES, n_iter=8)
     for v in fl:
         assert fx[v] == pytest.approx(fl[v], abs=1e-9)
 
@@ -107,62 +108,3 @@ def test_bfs_hops_multi_source_partition_invariance(spark):
     # hops from the nearer of the two endpoints of the path
     want = {v: min(v - 1, 30 - v) for v in range(1, 31)}
     assert dict(runs[0]) == want
-
-
-def test_bfs_hops_directed_mode(spark):
-    from cc_pyspark_spark.operators.pagerank import bfs_hops
-
-    # 1->2->3->4 with a back-arc 3->1 and a sink-only vertex 9 (4->9):
-    # directed from 1 reaches everything downstream; directed from 4
-    # reaches only 9; undirected from 4 reaches the whole component.
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (3, 1), (4, 9)], "s long, t long"
-    )
-    fwd = {
-        r["id"]: r["hops"]
-        for r in bfs_hops(
-            edges,
-            spark.createDataFrame([(1,)], "id long"),
-            max_iter=6,
-            directed=True,
-        ).collect()
-    }
-    assert fwd == {1: 0, 2: 1, 3: 2, 4: 3, 9: 4}
-    from_4 = {
-        r["id"]: r["hops"]
-        for r in bfs_hops(
-            edges,
-            spark.createDataFrame([(4,)], "id long"),
-            max_iter=6,
-            directed=True,
-        ).collect()
-    }
-    assert from_4 == {1: None, 2: None, 3: None, 4: 0, 9: 1}
-    undirected_from_4 = {
-        r["id"]: r["hops"]
-        for r in bfs_hops(
-            edges, spark.createDataFrame([(4,)], "id long"), max_iter=6
-        ).collect()
-    }
-    assert undirected_from_4 == {1: 2, 2: 2, 3: 1, 4: 0, 9: 1}
-
-
-def test_bfs_hops_backward_via_reversed_edges(spark):
-    from pyspark.sql import functions as F
-
-    from cc_pyspark_spark.operators.pagerank import bfs_hops
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "s long, t long"
-    )
-    rev = edges.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    back = {
-        r["id"]: r["hops"]
-        for r in bfs_hops(
-            rev,
-            spark.createDataFrame([(4,)], "id long"),
-            max_iter=6,
-            directed=True,
-        ).collect()
-    }
-    assert back == {1: 3, 2: 2, 3: 1, 4: 0}
