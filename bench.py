@@ -1,21 +1,24 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-  {"metric": "total_headline_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+Prints the full record as one JSON line, then a compact final line
+(at most TAIL_LIMIT characters) with the headline total and the
+medians of the slowest rows:
+  {"metric": "total_headline_sec", "value": N, "unit": "sec", "sf": ...,
+   "n_queries": ..., "queries": {name: sec, ...}}
 
-Each query is executed to completion with a `noop` sink (materializes
-every row, writes nothing). Timing discipline (r5 verdict: min-of-3
-showed ~±20% run-to-run variance on identical code): one untimed
-warm-up run per query, then the MEDIAN of 5 timed runs; the per-query
-relative spread ((max−min)/median of the timed runs) is reported under
-"spread" so round-over-round comparisons can see the noise floor.
-r14: each row also records "cold_sec" — the previously-discarded
-untimed warm-up's duration, i.e. the cold-construction number the warm
-medians exclude — and rows whose first batch spreads > 0.4 are
-re-measured once (the tighter batch is committed; if both exceed 0.4
-the row carries a spread_note naming the variance host-level).
+Every row is timed by one sampler (_sample): the clock starts before
+the row's builder is called and stops when the `noop` sink (which
+materializes every row and writes nothing) returns. Catalyst analysis
+and every Spark job a builder runs while it builds (eager checkpoints,
+loop rounds, driver-side scalars) therefore count toward the row, and
+the builder's share is recorded as "build_sec". Run 0 of a row is
+recorded as "cold_sec"; the row's number is the MEDIAN of the next
+SPARK_GRAFT_RUNS runs, with the relative spread ((max-min)/median)
+under "spread". A row whose spread exceeds 0.4 is re-measured once
+and the tighter batch is kept. Records written before the sampler
+timed 75 of the 101 rows write-only (builder outside the clock), so
+their totals are not comparable with later ones.
 
 Calibration (r6, idle guest): two back-to-back runs of identical code
 still differ ~±20% *wholesale* — min, median, and p25 over the same
@@ -24,6 +27,16 @@ hypervisor CPU), not per-sample jitter a better estimator could
 remove. Interpretation rule: a round-over-round per-query delta is
 signal only if it exceeds that query's recorded "spread"; headline
 totals within ~20% of the previous round are noise.
+
+Environment (validated by settings() before any session starts):
+  SPARK_GRAFT_SF_DIR  table directory (default: the sf0.1 test data;
+                      scripts/gen_scaled_sf.py builds larger ones)
+  SPARK_GRAFT_CPUS    local[N] and shuffle width (default 32)
+  SPARK_GRAFT_RUNS    timed runs per row (default 5)
+  SPARK_GRAFT_ONLY    comma-separated row names, run in the order
+                      given: any registered query or EXTRA_OPS name.
+                      A subset run writes no record file.
+A full run writes bench_result_sf{sf}_c{cpus}.json next to this file.
 """
 
 from __future__ import annotations
@@ -343,79 +356,6 @@ EXTRA_OPS = {
 }
 
 
-# Queries that materialize EAGERLY at construction (iterative
-# localCheckpoint(eager=True) loops): a write-only timer records
-# ~0 s for exactly the family the regression gate must watch
-# (graph_pagerank read 0.03 s in the first r8 run), so these time
-# construction + execution. Everything else keeps the r1-r7
-# write-only semantics — measuring py4j plan construction added a
-# uniform ~+0.3 s to 40 otherwise-unchanged queries, destroying
-# cross-round comparability for no information (construction
-# happens once per job in production, not per 100 TB of input).
-# r9 late: text_bpe_train's 10 argmax merge rounds and the theta
-# sketch's pair-join checkpoint also materialize at construction —
-# their write-only rows read ~0.05 s, so they join the
-# construction-inclusive timer.
-# r10: the four new iterative plans all run checkpointed loops at
-# construction (LPA every-4-rounds, k-core per-round, converged-CC's
-# convergence probe, kcenter's per-round center union); DSIR is a
-# lazy single plan and keeps write-only semantics.
-EAGER_CONSTRUCTION = {
-    "graph_pagerank",
-    "graph_cc_alternating",
-    "text_bpe_train",
-    "agg_theta_sketch_intersect",
-    "curation_priority_sample",
-    "graph_label_propagation",
-    "graph_kcore",
-    "graph_cc_converged",
-    "embedding_kcenter_coreset",
-    # r10: HITS checkpoints its round-2 frames, MMR eagerly
-    # materializes the candidate pool, vocab coverage's range-prefix
-    # scan checkpoint-pins its range exchange.
-    "graph_hits",
-    "sim_mmr_rerank",
-    "text_vocab_coverage",
-    # the sparse trainer checkpoints its <= d+2-row gradient table
-    # per round (the fused E+gradient aggregation), so the loop
-    # executes at construction.
-    "text_classifier_train_sparse",
-    # bitext scoring materializes once (read by both top-k passes).
-    "sim_bitext_mine",
-    # soft dedup composes the convergence-probed components loop
-    # (count probes run at construction); the cluster histogram
-    # composes the same loop.
-    "curation_soft_dedup",
-    "dedup_cluster_histogram",
-    # modularity composes LPA whose checkpointed rounds may run at
-    # construction for larger round budgets.
-    "graph_modularity",
-    # r11: both converged wrappers run their probe loops (eager
-    # checkpoints + driver-side scalar probes) at construction.
-    "graph_lpa_converged",
-    "graph_kcore_converged",
-    # r12: same probe-loop shape for the two newly gated wrappers;
-    # pipeline_full composes the connected_components probe loop.
-    "pagerank_converged",
-    "hits_converged",
-    "curation_pipeline_full",
-    # r12 late: the bucketed-join row prices the two bucketed writes +
-    # catalog registration at construction — that's the trade being
-    # measured (pay the shuffle once in the sink); epoch shuffle's W2
-    # operator eagerly checkpoints the range exchange at build.
-    "layout_bucketed_join",
-    "curation_epoch_shuffle",
-    # r12 late: pagerank_fixed's every-4-rounds eager checkpoints run
-    # at construction (the write-only row read 0.03 s, the
-    # graph_pagerank symptom exactly).
-    "wat_host_pagerank",
-    # r12 late: the exact-median gate now rides the W2 range-shuffle
-    # rank operator, whose range exchange is checkpoint-pinned at
-    # construction (previously a lazy single-group percentile plan).
-    "curation_dsir_importance",
-}
-
-
 #: Pinned reference for the calibration row (r13, VERDICT r12 ask #2:
 #: two consecutive rounds of ~1.3x uniform host drift had to be
 #: diagnosed by hand A/B — make it mechanical). Pinned to the IDLE
@@ -560,25 +500,150 @@ def _sweep_persistent_state(spark) -> int:
     return swept
 
 
-def _n_runs() -> int:
-    """Timed samples per query. Validates up front: 0/negative would
-    execute the untimed warm-up then crash statistics.median on an
-    empty sample list, after the queries already ran (r11 ADVICE)."""
-    n_runs = int(os.environ.get("SPARK_GRAFT_RUNS", "5"))
-    if n_runs < 1:
-        raise SystemExit(f"SPARK_GRAFT_RUNS must be >= 1, got {n_runs}")
-    return n_runs
+#: The driver keeps only the last ~2000 characters of stdout, so the
+#: final line must fit inside that with room to spare.
+TAIL_LIMIT = 1900
+
+
+def _positive_int(var: str, default: str) -> int:
+    raw = os.environ.get(var, default)
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise SystemExit(f"{var} must be an integer >= 1, got {raw!r}")
+    return value
+
+
+def settings() -> tuple[str, int, int, list[str] | None]:
+    """Read and validate the bench environment before any session
+    starts or query runs: (sf_dir, cpus, n_runs, only). ``only`` is
+    None for a full run. Raises SystemExit naming the bad value."""
+    n_runs = _positive_int("SPARK_GRAFT_RUNS", "5")
+    cpus = _positive_int("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if not os.path.isdir(sf_dir):
+        raise SystemExit(f"SPARK_GRAFT_SF_DIR: no such directory {sf_dir!r}")
+    raw = os.environ.get("SPARK_GRAFT_ONLY")
+    if not raw:
+        return sf_dir, cpus, n_runs, None
+    only = list(dict.fromkeys(n.strip() for n in raw.split(",") if n.strip()))
+    unknown = [n for n in only if n not in QUERIES and n not in EXTRA_OPS]
+    if unknown or not only:
+        raise SystemExit(f"SPARK_GRAFT_ONLY: unknown rows {unknown or raw!r}")
+    return sf_dir, cpus, n_runs, only
+
+
+def _sf(sf_dir: str) -> float:
+    """Scale factor from a directory named sf<N>, else -1."""
+    try:
+        return float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
+    except ValueError:
+        return -1.0
+
+
+def _sample(spark, sf_dir, builder) -> tuple[float, float]:
+    """One timed run of a row: (builder call to sink, builder call).
+
+    DELIBERATELY NO sweep between runs (r13, measured): Spark's cache
+    manager matches by logical-plan equality, so run i's construction
+    silently reuses run i-1's operator caches — the documented
+    warm-run semantics every round's numbers carry. An r13 experiment
+    swept between runs and it DOUBLED the iterative rows
+    (graph_pagerank+LPA 8.0 -> 15.4 s same-session A/B) by making every
+    run rebuild the edge/adjacency caches cold. The between-QUERY
+    sweep in main() still stops cross-query accumulation."""
+    start = time.perf_counter()
+    df = builder(spark, sf_dir)
+    built = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - start, built - start
+
+
+def measure_row(spark, sf_dir, builder, n_runs: int) -> dict:
+    """A row's record: run 0 as cold_sec, then the median and spread
+    of n_runs samples plus the median builder time. A batch whose
+    spread exceeds 0.4 (r14, VERDICT r13 ask #6: one contended run
+    poisons max-min forever, and the worst offenders are iterative
+    rows) gets ONE fresh batch (warm continuation) and the tighter
+    batch is kept; if both exceed 0.4 the row says so in spread_note."""
+
+    def batch() -> tuple[list[float], list[float], float, float]:
+        runs = [_sample(spark, sf_dir, builder) for _ in range(n_runs)]
+        samples = [t for t, _ in runs]
+        med = statistics.median(samples)
+        spr = (max(samples) - min(samples)) / med
+        return samples, [b for _, b in runs], med, spr
+
+    cold_sec, _ = _sample(spark, sf_dir, builder)
+    samples, builds, med, spr = batch()
+    retry_spreads = None
+    if spr > 0.4 and n_runs >= 3:
+        retry = batch()
+        retry_spreads = [round(spr, 3), round(retry[3], 3)]
+        if retry[3] < spr:
+            samples, builds, med, spr = retry
+    row = {
+        "median": round(med, 4),
+        "spread": round(spr, 3),
+        "n_runs": len(samples),
+        "cold_sec": round(cold_sec, 4),
+        "build_sec": round(statistics.median(builds), 4),
+    }
+    if retry_spreads is not None:
+        row["retry_spreads"] = retry_spreads
+    if retry_spreads is not None and spr > 0.4:
+        # r15 (ADVICE r14): samples that climb near-monotonically
+        # (text_bpe_train's within-query checkpoint accumulation) fail
+        # both batches deterministically — workload-level drift, not
+        # ambient noise; anything else asserts no cause.
+        inversions = sum(
+            1 for a, b in zip(samples, samples[1:]) if a > b * 1.05
+        )
+        climbs = (
+            inversions <= max(1, len(samples) // 4)
+            and samples[-1] > samples[0] * 1.2
+        )
+        row["spread_note"] = (
+            f"variance persisted across 2 batches of {n_runs}"
+            + (
+                " and samples climb near-monotonically (workload-level "
+                "accumulation, e.g. within-query cache/checkpoint growth; "
+                if climbs
+                else " (persistent for this row; "
+            )
+            + "compare via samples, not the point median)"
+        )
+    # raw samples for slow rows (where host drift can hide a real
+    # regression) and re-measured ones, so readers can pool them
+    if med > 2.0 or retry_spreads is not None:
+        row["samples"] = [round(x, 4) for x in samples]
+    return row
+
+
+def tail_line(head: dict, timings: dict[str, float]) -> str:
+    """The final stdout line: ``head`` plus the medians of as many rows
+    as fit in TAIL_LIMIT characters, slowest first."""
+
+    def line(queries: dict[str, float]) -> str:
+        return json.dumps({**head, "queries": queries}, separators=(",", ":"))
+
+    queries: dict[str, float] = {}
+    for name in sorted(timings, key=timings.__getitem__, reverse=True):
+        if len(line({**queries, name: timings[name]})) > TAIL_LIMIT:
+            break
+        queries[name] = timings[name]
+    return line(queries)
 
 
 def main() -> None:
-    _n_runs()  # fail fast, before the session or any warm-up query
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf_dir, cpus, n_runs, only = settings()
+    sf = _sf(sf_dir)
     spark = build_session(
         app_name="cc-pyspark-spark-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
     )
 
     # Warm-up: JVM JIT, codegen, parquet footer caches. q6 covers the
@@ -598,23 +663,7 @@ def main() -> None:
     cal_first = _calibration_sec(spark)
     cal_sh_first = _calibration_shuffle_sec(spark)
 
-
-    # SPARK_GRAFT_ONLY="name1,name2" re-measures a subset (same warm-up
-    # and timing discipline) — for deciding noise vs regression on
-    # movers without paying a full run.
-    only = os.environ.get("SPARK_GRAFT_ONLY")
-    names = (
-        [n for n in HEADLINERS if n in set(only.split(","))]
-        if only
-        else HEADLINERS
-    )
-
-    # SPARK_GRAFT_RUNS: timed samples per query (default 5, plus one
-    # untimed warm-up). One-off giant-SF sweeps (the SCALING.md sf1
-    # suite run) drop it to 1 to keep wall-clock sane.
-    n_runs = _n_runs()
-    timings: dict[str, float] = {}
-    spread: dict[str, float] = {}
+    names = only or HEADLINERS
     stats: dict[str, dict] = {}
     # r14: a MID-session calibration reading joins the first/last
     # brackets. Measured blind spot (see SCALING.md "Ambient-load
@@ -629,125 +678,11 @@ def main() -> None:
         if qi == mid_at and len(names) >= 20:
             cal_mid = _calibration_sec(spark)
             cal_sh_mid = _calibration_shuffle_sec(spark)
-        samples: list[float] = []
-        cold_sec = 0.0
         builder = EXTRA_OPS.get(name) or QUERIES[name].spark
-        for i in range(n_runs + 1):  # run 0 = per-query warm-up, untimed
-            if name in EAGER_CONSTRUCTION:
-                # DELIBERATELY NO between-run sweep here (r13,
-                # measured): Spark's cache manager matches by logical-
-                # plan equality, so run i's construction silently
-                # reuses run i-1's operator caches — the documented
-                # warm-run semantics every previous round's numbers
-                # carry. An r13 experiment swept between eager runs to
-                # stop within-query checkpoint-garbage accumulation
-                # (text_bpe_train's samples climb 3.2 -> 5.7 s across
-                # its own runs) and it DOUBLED the iterative rows
-                # (graph_pagerank+LPA 8.0 -> 15.4 s same-session A/B,
-                # host_factor ~1.0 both arms) by making every run
-                # rebuild the edge/adjacency caches cold. Warm
-                # comparability wins; the between-QUERY sweep below
-                # still stops cross-query accumulation.
-                start = time.perf_counter()
-                df = builder(spark, sf_dir)
-            else:
-                df = builder(spark, sf_dir)
-                start = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            if i > 0:
-                samples.append(time.perf_counter() - start)
-            else:
-                # r14 (VERDICT r13 ask #5): the untimed warm-up IS the
-                # cold-construction number the committed medians
-                # deliberately exclude (plan-equality cache reuse makes
-                # runs 1..n warm) — record it instead of throwing it
-                # away, at zero extra runtime. Read cold_sec vs median
-                # to see a row's cache/checkpoint warm-up cost; only
-                # the medians are cross-round comparable.
-                cold_sec = time.perf_counter() - start
-        # r14 (VERDICT r13 ask #6): a committed median whose samples
-        # span > 0.4 of it weakens the round-over-round mover detector,
-        # and the record's worst offenders are exactly the iterative
-        # rows where one contended run poisons (max-min) forever. For
-        # those rows take ONE fresh batch of n_runs (warm continuation
-        # — no sweep between batches, same within-row semantics) and
-        # commit whichever batch is tighter; if both batches exceed
-        # 0.4, the variance is host-level for this row — say so in the
-        # record instead of silently shipping an unstable median.
-        med = statistics.median(samples)
-        spr = (max(samples) - min(samples)) / med
-        retry_spreads = None
-        if spr > 0.4 and n_runs >= 3:
-            resamples = []
-            for _ in range(n_runs):
-                if name in EAGER_CONSTRUCTION:
-                    start = time.perf_counter()
-                    df = builder(spark, sf_dir)
-                else:
-                    df = builder(spark, sf_dir)
-                    start = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                resamples.append(time.perf_counter() - start)
-            med2 = statistics.median(resamples)
-            spr2 = (max(resamples) - min(resamples)) / med2
-            retry_spreads = [round(spr, 3), round(spr2, 3)]
-            if spr2 < spr:
-                samples, med, spr = resamples, med2, spr2
-        med = statistics.median(samples)
-        timings[name] = round(med, 4)
-        spread[name] = round((max(samples) - min(samples)) / med, 3)
-        # Self-describing per-row record (VERDICT r10 ask #2): median,
-        # relative spread, and sample count travel together so a
-        # cross-round reader never has to guess the estimator; rows
-        # whose median exceeds 2 s — exactly the iterative plans where
-        # host drift (the measured 7.7-12.1 s same-code band on
-        # graph_triangle_stats) can hide a real regression — also
-        # carry the RAW samples, so any future comparison can pool
-        # distributions instead of comparing two point medians.
-        stats[name] = {
-            "median": timings[name],
-            "spread": spread[name],
-            "n_runs": len(samples),
-            "cold_sec": round(cold_sec, 4),
-            # r15 (VERDICT r14 ask #2): stage class for normalization
-            # — compare_bench divides this row by the matching factor.
-            "class": _row_class(name),
-        }
-        if retry_spreads is not None:
-            stats[name]["retry_spreads"] = retry_spreads
-            if spread[name] > 0.4:
-                # r15 (ADVICE r14): don't assert a host-level cause
-                # when the samples themselves say otherwise. A row
-                # whose runs climb monotonically (text_bpe_train's
-                # 3.2 -> 5.7 s within-query checkpoint accumulation)
-                # deterministically fails both batches — that's
-                # workload-level drift, not ambient noise. Near-
-                # sorted-ascending samples get the drift label;
-                # everything else keeps only the observable claim
-                # ("persistent for this row"), cause unasserted.
-                inversions = sum(
-                    1
-                    for a, b in zip(samples, samples[1:])
-                    if a > b * 1.05
-                )
-                if inversions <= max(1, len(samples) // 4) and samples[
-                    -1
-                ] > samples[0] * 1.2:
-                    stats[name]["spread_note"] = (
-                        f"variance persisted across 2 batches of "
-                        f"{n_runs} and samples climb near-monotonically "
-                        "(workload-level accumulation, e.g. within-query "
-                        "cache/checkpoint growth; compare via samples, "
-                        "not the point median)"
-                    )
-                else:
-                    stats[name]["spread_note"] = (
-                        f"variance persisted across 2 batches of "
-                        f"{n_runs} (persistent for this row; compare "
-                        "via samples, not the point median)"
-                    )
-        if med > 2.0 or retry_spreads is not None:
-            stats[name]["samples"] = [round(s, 4) for s in samples]
+        stats[name] = measure_row(spark, sf_dir, builder, n_runs)
+        # r15 (VERDICT r14 ask #2): stage class for normalization
+        # — compare_bench divides this row by the matching factor.
+        stats[name]["class"] = _row_class(name)
         # Free this query's operator-internal caches before the next
         # one: within-query warm/timed semantics are unchanged (all
         # runs share the caches), but 45 queries' LSH/adjacency blocks
@@ -758,13 +693,9 @@ def main() -> None:
         # are recorded so a round-over-round reader can see which
         # queries leave checkpoint state behind (iterative loops) and
         # how much; an unexplained count IS the leak signal (r14).
-        # SPARK_GRAFT_NO_SWEEP=1 disables the sweep+GC — the A/B knob
-        # for attributing cross-round movers to the protocol change
-        # (VERDICT r13 ask #4); never set it for a committed record.
-        if not os.environ.get("SPARK_GRAFT_NO_SWEEP"):
-            swept = _sweep_persistent_state(spark)
-            if swept:
-                stats[name]["swept_blocks"] = swept
+        swept = _sweep_persistent_state(spark)
+        if swept:
+            stats[name]["swept_blocks"] = swept
 
     cal_last = _calibration_sec(spark)
     cal_sh_last = _calibration_shuffle_sec(spark)
@@ -779,12 +710,13 @@ def main() -> None:
         sum(cal_sh_points) / len(cal_sh_points) / CALIBRATION_SHUFFLE_REF_SEC, 4
     )
 
+    timings = {name: row["median"] for name, row in stats.items()}
     result = {
         "metric": "total_headline_sec",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "spread": spread,
+        "spread": {name: row["spread"] for name, row in stats.items()},
         "stats": stats,
         "sf": sf,
         # Mechanical drift normalization (VERDICT r12 ask #2): divide
@@ -816,30 +748,22 @@ def main() -> None:
         },
     }
     payload = json.dumps(result)
-    # The driver's stdout-tail capture truncated BENCH_r07 (first 18
-    # timings lost to a 2000-char cap) — persist the full record in the
-    # repo as well so the artifact never depends on the tail alone.
-    # (Subset runs via SPARK_GRAFT_ONLY never overwrite the full record.)
-    # SPARK_GRAFT_RESULT_PATH redirects the persisted record (one-off
-    # scaled-SF sweeps must not clobber the round artifact).
+    # The full record is also a file (subset runs write none), named by
+    # scale factor and core count so runs at different widths never
+    # overwrite each other: the stdout tail alone lost rows (BENCH_r07).
     if not only:
-        path = os.environ.get(
-            "SPARK_GRAFT_RESULT_PATH",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_result.json"),
+        path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            f"bench_result_sf{sf:g}_c{cpus}.json",
         )
         with open(path, "w") as f:
             f.write(payload + "\n")
     print(payload)
-    # The driver records only the LAST ~2000 chars of stdout, and the
-    # full payload (60 queries x timings + spreads) overflows that, so
-    # its head — metric/value — was truncated away and BENCH_r07..r09
-    # recorded "parsed": null (VERDICT r9 ask #8). Emit a compact,
-    # complete record as the FINAL line so the tail always contains a
-    # parseable headline number; the full per-query record lives in the
-    # line above and in bench_result.json.
+    # The driver records only the LAST ~2000 chars of stdout, which the
+    # full payload overflows (BENCH_r07..r09 recorded "parsed": null),
+    # so the FINAL line is a compact complete record of its own.
     print(
-        json.dumps(
+        tail_line(
             {
                 "metric": "total_headline_sec",
                 "value": result["value"],
@@ -848,8 +772,8 @@ def main() -> None:
                 "n_queries": len(timings),
                 "host_factor": host_factor,
                 "host_factor_shuffle": host_factor_shuffle,
-                "queries": {"_full_record": "bench_result.json"},
-            }
+            },
+            timings,
         )
     )
     spark.stop()

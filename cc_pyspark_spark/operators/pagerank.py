@@ -699,7 +699,7 @@ def hits_fixed(edges: DataFrame, rounds: int = 2) -> DataFrame:
 def hits_converged(
     edges: DataFrame,
     scale_bits: int = 20,
-    max_rounds: int = 32,
+    max_rounds: int = 128,
 ) -> DataFrame:
     """:func:`hits_fixed`'s power iteration QUANTIZED and run to an
     exact integer fixed point, with a ``max_rounds`` guard that RAISES.
@@ -718,7 +718,10 @@ def hits_converged(
     finitely many rounds: the stop probe is L-infinity delta <= 1 ulp
     on BOTH frames (the 1-ulp tolerance absorbs the adjacent-level
     flicker a floor can oscillate between), both deltas in one action
-    over checkpointed frames, from round 2 on.
+    over checkpointed frames, from round 2 on. Small graphs can settle
+    slowly (a 3-cycle with in- and out-tails needs more than 40
+    rounds), so the default guard is 128; it only stops a loop that
+    never settles.
 
     Returns (id, kind, score_fp, score) like hits_fixed: score_fp is
     the fixed-point integer (max = 2^scale_bits by construction),

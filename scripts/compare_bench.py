@@ -20,9 +20,14 @@ r15 probe gating (VERDICT r14 ask #3): the named unstable iterative
 rows (fixed-round LPA and the convergence-probed variants whose
 in-suite medians are host samples, not code signal — 4.21/2.85/5.09/
 17.9 s across four same-code r14 records) are EXCLUDED from the
-movers list and reported separately with a pointer at the
-session-isolated probe record (r*_probe.json), which is the
-cross-round gate for them.
+movers list and reported separately. Compare them with fresh-process
+subset runs instead, one process per row:
+``SPARK_GRAFT_ONLY=<row> python bench.py`` at each commit.
+
+Timers: records whose rows carry ``build_sec`` time every row from
+the builder call to the sink; older records timed most rows
+write-only. When exactly one of the two records carries it, a
+one-line caveat says the two use different timers.
 
 r15 cold movers (VERDICT r14 ask #5): ``cold_sec`` is the one-sample
 cold-construction number the warm medians exclude; round-over-round
@@ -45,10 +50,9 @@ import json
 import statistics
 import sys
 
-#: Session-isolated-probe-gated rows (VERDICT r14 ask #3). Their
-#: in-suite medians carry multi-record spread_notes on unchanged code;
-#: the mover call for them is made against r*_probe.json medians, not
-#: suite medians.
+#: Rows gated outside the suite (VERDICT r14 ask #3). Their in-suite
+#: medians carry multi-record spread_notes on unchanged code; the
+#: mover call for them is made on fresh-process subset runs.
 PROBE_GATED = frozenset({
     "graph_label_propagation",
     "pagerank_converged",
@@ -100,6 +104,18 @@ def main() -> None:
             "is an approximation. Trust the raw line + ratio band for "
             "pre-r13 records; normalized comparisons are exact only "
             "between two records that both carry host_factor."
+        )
+
+    timed = [
+        any("build_sec" in v for v in rec.get("stats", {}).values())
+        for rec in (old, new)
+    ]
+    if timed[0] != timed[1]:
+        print(
+            "CAVEAT: the records use different timers — only the "
+            f"{'old' if timed[0] else 'new'} one times every row from "
+            "builder call to sink (build_sec); the other timed most "
+            "rows write-only."
         )
 
     qo, qn = old["queries"], new["queries"]
@@ -183,8 +199,8 @@ def main() -> None:
         print("movers beyond their own spread: none")
     if probe_gated_movers:
         print(
-            "probe-gated rows moved in-suite (NOT signal — the gate "
-            "for these is the session-isolated r*_probe.json median):"
+            "probe-gated rows moved in-suite (NOT signal — compare "
+            "these with fresh-process SPARK_GRAFT_ONLY=<row> runs):"
         )
         for r, n in sorted(probe_gated_movers):
             print(f"  {n}: {qo[n]:.2f} -> {qn[n]:.2f} s (x{r:.2f})")

@@ -3,12 +3,11 @@
 
 Replicates every table ``factor`` times with per-replica key shifts
 (fresh ids, join-consistent across tables: replica i shifts every
-surrogate key by i * 10_000_000, the scripts/*_scale_probe.py
-convention), writing real parquet so the registered queries run
-UNMODIFIED against the scaled directory via their normal Catalog scans
-— this is what lets one harness probe any query at 2x/10x and lets
-bench.py run the whole headliner suite at sf1 (SCALING.md, VERDICT r10
-asks #5/#6).
+surrogate key by i * 10_000_000), writing real parquet so the
+registered queries run UNMODIFIED against the scaled directory via
+their normal Catalog scans — this is what lets bench.py run any row
+(SPARK_GRAFT_ONLY) or the whole headliner suite at 2x/10x/sf1
+(SCALING.md, VERDICT r10 asks #5/#6).
 
 Replica content (r12, VERDICT r11 ask #3): by default documents.text
 and embeddings.embedding are deterministically perturbed per replica

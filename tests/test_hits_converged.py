@@ -68,3 +68,12 @@ def test_hits_converged_deterministic_across_partitionings(spark):
         _edges(spark, _STAR).repartition(7, "s")
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_hits_converged_slow_graph_settles_under_default_guard(spark):
+    # the cycle 1->2->3->1 with tails 4->3, 5->1 and 3->6->7->8 needs
+    # more than 40 rounds to reach its integer rest state; the default
+    # guard must leave room for it (graph_analyze passes no max_rounds)
+    pairs = [(1, 2), (2, 3), (3, 1), (4, 3), (5, 1), (3, 6), (6, 7), (7, 8)]
+    rows = hits_converged(_edges(spark, pairs)).collect()
+    assert len(rows) == 13

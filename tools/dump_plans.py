@@ -1,13 +1,27 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the headline queries."""
+"""Formatted physical plans of registered queries and bench rows.
+
+  python tools/dump_plans.py                    # regenerate PLANS.md
+  python tools/dump_plans.py OUT_DIR NAME ...   # OUT_DIR/NAME.txt
+
+With no arguments PLANS.md is rebuilt from the HEAD queries at sf0.01.
+With an output directory and names (any registered query or bench
+EXTRA_OPS row), each plan is written by ``explain("formatted")`` to
+OUT_DIR/NAME.txt at the bench's SPARK_GRAFT_SF_DIR and
+SPARK_GRAFT_CPUS, so a before/after pair is comparable with bench
+rows. Iterative rows run their checkpointed loops while they build,
+so their dumped plan is the post-checkpoint tail.
+"""
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import EXTRA_OPS, settings  # noqa: E402
+from cc_pyspark_spark.caching import release_caches  # noqa: E402
 from cc_pyspark_spark.session import build_session  # noqa: E402
-from cc_pyspark_spark.plans.registry import QUERIES
-import cc_pyspark_spark.plans  # noqa: F401 — registers queries
+from cc_pyspark_spark.plans.registry import QUERIES  # noqa: E402
+import cc_pyspark_spark.plans  # noqa: E402,F401 — registers queries
 
 HEAD = [
     "tpch_q1_pricing_summary", "tpch_q5_local_supplier_volume", "topk_global",
@@ -102,6 +116,34 @@ HEAD = [
 ]
 
 
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump(out_dir: str, names: list) -> None:
+    """Write OUT_DIR/NAME.txt for each name, at the bench's scale."""
+    unknown = [n for n in names if n not in QUERIES and n not in EXTRA_OPS]
+    if unknown or not names:
+        raise SystemExit(
+            f"dump_plans: unknown names {unknown}" if unknown else __doc__
+        )
+    sf_dir, cpus, _, _ = settings()
+    os.makedirs(out_dir, exist_ok=True)
+    spark = build_session(
+        app_name="dump-plans", master=f"local[{cpus}]", shuffle_partitions=cpus
+    )
+    for name in names:
+        builder = EXTRA_OPS.get(name) or QUERIES[name].spark
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(_plan(builder(spark, sf_dir)))
+        print(f"wrote {path}")
+        release_caches()
+    spark.stop()
+
+
 def main(sf: str = "/root/testdata/sf0.01") -> None:
     spark = build_session(master="local[8]", shuffle_partitions=16)
     out = [
@@ -117,9 +159,10 @@ def main(sf: str = "/root/testdata/sf0.01") -> None:
             "Plan is `Scan ExistingRDD` by design: the 8th (final) power-iteration round sits behind the eager `localCheckpoint` that truncates "
             "the iterative lineage (the discipline that keeps 100-round "
             "runs plannable). Per-iteration shape: one shuffle keyed by "
-            "target vertex + broadcast scalars; pinned in "
-            "tests/test_pagerank_fixed.py (partition invariance, no "
-            "per-iteration driver actions in the float twin's test)."
+            "target vertex + broadcast scalars; partition invariance "
+            "pinned in tests/test_pagerank_fixed.py, no per-iteration "
+            "driver actions in tests/test_pagerank.py::"
+            "test_pagerank_no_per_iteration_driver_actions."
         ),
         "graph_bfs_hops": (
             "Same checkpoint truncation as graph_pagerank; "
@@ -137,11 +180,7 @@ def main(sf: str = "/root/testdata/sf0.01") -> None:
         ),
     }
     for name in HEAD:
-        df = QUERIES[name].spark(spark, sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        lines = plan.splitlines()
+        lines = _plan(QUERIES[name].spark(spark, sf)).splitlines()
         tree_end = next(i for i, l in enumerate(lines) if l.strip() == "" and i > 2)
         detail = [
             l
@@ -161,4 +200,7 @@ def main(sf: str = "/root/testdata/sf0.01") -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) > 1:
+        dump(sys.argv[1], sys.argv[2:])
+    else:
+        main()
