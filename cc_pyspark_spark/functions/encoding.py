@@ -9,8 +9,14 @@ statistical sniffer below fills that role without bundling a detector
 library, so unlabeled Shift-JIS/KOI8-R/EUC pages decode correctly
 instead of degrading to latin-1 mojibake.
 
-`decode_bytes` is plain Python for the Arrow worker path;
-`decode_payload` is its vectorized pandas-UDF twin for DataFrame use.
+`decode_bytes` is plain Python for the Arrow worker path: the WARC
+sources call it at parse time (`warc_records` / `fetch_warc_records`
+with ``decode_payload_text=True``), which is how the crawl jobs get
+text. `decode_payload` is its vectorized pandas-UDF twin for a frame
+that already holds payload bytes. It is deterministic, so Catalyst
+copies it into every filter pushed below the projection that calls it
+— each copy is another Python worker per task and another decode per
+payload — which is why no crawl pipeline uses it.
 """
 
 from __future__ import annotations

@@ -374,30 +374,27 @@ def warc_to_documents(
     decode chain (F13/F14), HTML→text via the parser-backend registry
     (F12), language ID + quality scoring (plans/text.py heuristics),
     token gating, and distributed dense doc_ids (W2 scale path — no
-    global-sort window). Everything except the decode UDF is JVM-side.
+    global-sort window). `records` must carry the parse-time decode's
+    `payload_text` (`warc_records(..., decode_payload_text=True)`), so
+    the only Python in the stage is the parse itself; with the default
+    regex parser everything downstream of it is JVM-side.
     """
-    from cc_pyspark_spark.functions.encoding import decode_payload  # noqa: PLC0415
     from cc_pyspark_spark.functions.html import html_backend  # noqa: PLC0415
     from cc_pyspark_spark.functions.text import tokenize  # noqa: PLC0415
     from cc_pyspark_spark.operators.ids import assign_sequential_ids  # noqa: PLC0415
     from cc_pyspark_spark.plans.text import lang_id_col, quality_ok_col  # noqa: PLC0415
-    from cc_pyspark_spark.sources.warc import is_html  # noqa: PLC0415
 
+    if "payload_text" not in records.columns:
+        raise ValueError(
+            "warc_to_documents needs a payload_text column: build the "
+            "records with warc_records(..., decode_payload_text=True)"
+        )
     to_text = html_backend(html_parser)
-    charset = F.expr(
-        "filter(http_headers, h -> lower(h.name) = 'content-type')[0].value"
-    )
-    charset = F.regexp_extract(F.coalesce(charset, F.lit("")), "charset=([^;\\s]+)", 1)
-    html = (
-        records.filter(
-            (F.col("record_type") == "response") & is_html()
-        )
-        .select(
-            F.col("target_uri").alias("url"),
-            decode_payload(F.col("payload"), charset).alias("raw_html"),
-        )
-        .withColumn("text", to_text("raw_html"))
-        .drop("raw_html")
+    html = records.filter(
+        (F.col("record_type") == "response") & is_html()
+    ).select(
+        F.col("target_uri").alias("url"),
+        to_text(F.col("payload_text")).alias("text"),
     )
     gated = html.filter(F.size(tokenize("text")) >= min_tokens)
     docs = gated.select(

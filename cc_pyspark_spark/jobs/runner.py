@@ -32,16 +32,19 @@ from cc_pyspark_spark.jobs.pipelines import (
 from cc_pyspark_spark.session import build_session
 from cc_pyspark_spark.sources.warc import WarcMetrics, warc_records
 
+#: name → (pipeline, output sort key, `warc_records` parse options).
 JOBS = {
-    "server_count": (server_count, None),
-    "html_tag_count": (html_tag_count, None),
-    "word_count": (word_count, None),
-    "server_ip_address": (server_ip_address, None),
-    "sitemaps_from_robotstxt": (sitemaps_from_robotstxt, None),
-    "wat_extract_host_links": (wat_extract_host_links, ["s", "t"]),
-    # crawl → documents-table bridge (decode → html→text → lang/quality
-    # gates → distributed dense doc_ids)
-    "warc_to_documents": (warc_to_documents, ["doc_id"]),
+    "server_count": (server_count, None, {}),
+    "html_tag_count": (html_tag_count, None, {}),
+    "word_count": (word_count, None, {}),
+    "server_ip_address": (server_ip_address, None, {}),
+    "sitemaps_from_robotstxt": (sitemaps_from_robotstxt, None, {}),
+    "wat_extract_host_links": (wat_extract_host_links, ["s", "t"], {}),
+    # crawl → documents-table bridge (parse-time decode → html→text →
+    # lang/quality gates → distributed dense doc_ids)
+    "warc_to_documents": (
+        warc_to_documents, ["doc_id"], {"decode_payload_text": True}
+    ),
 }
 
 
@@ -903,7 +906,7 @@ def _dispatch_job(spark, args: argparse.Namespace) -> int:
         return _run_graph_analyze(spark, args)
     if args.job in DOC_JOBS:
         return _run_doc_job(spark, args)
-    job_fn, sort_cols = JOBS[args.job]
+    job_fn, sort_cols, parse_opts = JOBS[args.job]
     metrics = WarcMetrics(spark)
     records = warc_records(
         spark,
@@ -912,6 +915,7 @@ def _dispatch_job(spark, args: argparse.Namespace) -> int:
         num_input_partitions=args.num_input_partitions,
         metrics=metrics,
         local_temp_dir=args.local_temp_dir,
+        **parse_opts,
     )
     df = job_fn(records)
     # A8 dataflow metrics: accumulators for the parse stage +

@@ -61,18 +61,23 @@ def range_partitioned(
 _PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
 
 
-def _evaluates_python(df: DataFrame) -> bool:
-    """Whether evaluating ``df`` runs Python, read off its optimized
-    logical plan. A cached relation is a leaf here: reading it back
-    runs no Python, whatever its own plan did."""
-    todo = [df._jdf.queryExecution().optimizedPlan()]
+def _python_nodes(df: DataFrame) -> list[str]:
+    """Names of the nodes of ``df``'s optimized logical plan that hand
+    rows to a Python worker. A cached relation is a leaf here: reading
+    it back runs no Python, whatever its own plan did."""
+    todo, found = [df._jdf.queryExecution().optimizedPlan()], []
     while todo:
         node = todo.pop()
         if _PYTHON_NODE.search(node.nodeName()):
-            return True
+            found.append(node.nodeName())
         children = node.children()
         todo.extend(children.apply(i) for i in range(children.size()))
-    return False
+    return found
+
+
+def _evaluates_python(df: DataFrame) -> bool:
+    """Whether evaluating ``df`` runs Python (see :func:`_python_nodes`)."""
+    return bool(_python_nodes(df))
 
 
 def _checkpointed_ranges(

@@ -13,12 +13,42 @@ written so the same code runs unmodified under spark-submit.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 # Sized for the local[32] test harness; on a cluster these are
 # per-job knobs (see jobs/base.py CLI args).
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: A JVM memory string (`8g`, `2048m`, `512mb`): a positive count and
+#: an optional byte-unit suffix, as `spark.driver.memory` parses it.
+_JVM_MEM = re.compile(r"[1-9][0-9]*([kmgtp]b?|b)?")
+
+
+def _env_settings() -> tuple[str, str]:
+    """SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM, validated.
+
+    A bad value raises ValueError naming the variable and the value,
+    instead of reaching the builder as a malformed master URL or JVM
+    option."""
+    raw_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(raw_cpus)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw_cpus!r}"
+        )
+    raw_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    mem = raw_mem.strip().lower()
+    if not _JVM_MEM.fullmatch(mem):
+        raise ValueError(
+            "SPARK_GRAFT_DRIVER_MEM must be a JVM memory string such as "
+            f"8g or 2048m, got {raw_mem!r}"
+        )
+    return str(cpus), mem
 
 
 def build_session(
@@ -36,7 +66,7 @@ def build_session(
     never are — a CLI job run inside a live session (a test suite, a
     benchmark harness) keeps that session's shuffle width.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = _env_settings()
     # The same test getOrCreate uses to reuse a session: the instantiated
     # one, in any thread, while its context runs. getActiveSession() is
     # thread-local and misses a session started in another thread.
@@ -56,7 +86,7 @@ def build_session(
         # (notEnoughMemoryToBuildAndBroadcastTableError, observed r9).
         # Only effective at first JVM launch; a no-op on reuse, and on
         # a real cluster spark-submit's --driver-memory supersedes it.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.driver.memory": driver_mem,
         # Catalyst / AQE: let the optimizer re-plan shuffles, coalesce
         # small partitions, and split skewed ones at runtime.
         "spark.sql.adaptive.enabled": "true",

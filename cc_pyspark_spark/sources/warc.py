@@ -16,14 +16,22 @@ pipeline (see jobs/).
 
 Scale design: `record_types` / `parse_http` / `with_payload` are
 pushed into the parser (the FastWARC parse-time filter, P10) so
-request records and unused payload bytes never cross into Arrow. The
-records DataFrame arrives partitioned by archive file, which is also
-the natural clustering for downstream dedup (partition by
-`warc_filename`, no shuffle before the first aggregation).
+request records and unused payload bytes never cross into Arrow.
+`decode_payload_text` decodes response bodies in the same worker that
+parses them (the reference's decode inside `process_record`,
+sparkcc.py:381-410): a job that needs text then reads a `payload_text`
+column, and its stage runs one Python node. A decode UDF over the
+records frame would instead be copied by Catalyst into every filter
+pushed below it — one more Python worker per task and one more decode
+per payload for each copy. The records DataFrame arrives partitioned
+by archive file, which is also the natural clustering for downstream
+dedup (partition by `warc_filename`, no shuffle before the first
+aggregation).
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -65,6 +73,34 @@ WARC_RECORD_SCHEMA = T.StructType(
 
 _SCHEMA_COLS = [f.name for f in WARC_RECORD_SCHEMA.fields]
 
+#: `WARC_RECORD_SCHEMA` plus the decoded body, for `decode_payload_text`.
+WARC_TEXT_SCHEMA = T.StructType(
+    WARC_RECORD_SCHEMA.fields + [T.StructField("payload_text", T.StringType())]
+)
+
+_TEXT_COLS = [f.name for f in WARC_TEXT_SCHEMA.fields]
+
+#: The JVM's `regexp_extract(ct, 'charset=([^;\\s]+)', 1)`: case-sensitive,
+#: and ASCII `\s`, which is Java's whitespace class.
+_CHARSET_RE = re.compile(r"charset=([^;\s]+)", re.ASCII)
+
+
+def header_charset(http_headers) -> str:
+    """The charset the first Content-Type header declares, or ''.
+
+    Bit for bit the JVM expression `regexp_extract(coalesce(get(filter(
+    http_headers, h -> lower(h.name) = 'content-type'), 0).value, ''),
+    'charset=([^;\\s]+)', 1)`, so a parse-time decode picks the same
+    codec as the column-level `decode_payload` over that expression.
+    (Its `[0]` spelling fails the task under ANSI mode when a record
+    has HTTP headers but no Content-Type; `get` gives NULL, as here.)
+    """
+    for name, value in http_headers or ():
+        if name.lower() == "content-type":
+            m = _CHARSET_RE.search(value or "")
+            return m.group(1) if m else ""
+    return ""
+
 
 # Backend-dispatching helpers live in sources/fetch.py (local seek/read,
 # HTTP Range GET, injectable s3 client — sparkcc.py:291-342 parity).
@@ -79,6 +115,7 @@ def _record_rows(
     parse_http: bool,
     with_payload: bool,
     local_temp_dir: str | None = None,
+    decode_payload_text: bool = False,
 ):
     """Stream one archive's records as plain dicts.
 
@@ -107,15 +144,19 @@ def _record_rows(
                 contextlib.closing(open_stream(uri))
             )
         yield from _stream_rows(
-            stream, filename, record_types, parse_http, with_payload
+            stream, filename, record_types, parse_http, with_payload,
+            decode_payload_text,
         )
 
 
-def _stream_rows(stream, filename, record_types, parse_http, with_payload):
+def _stream_rows(
+    stream, filename, record_types, parse_http, with_payload,
+    decode_payload_text=False,
+):
     for rec in iter_warc_records(
         stream, parse_http=parse_http, record_types=record_types
     ):
-        yield {
+        row = {
             "warc_filename": filename,
             "warc_record_offset": rec.offset,
             "warc_record_length": rec.length,
@@ -131,6 +172,13 @@ def _stream_rows(stream, filename, record_types, parse_http, with_payload):
             "http_headers": rec.http_headers or None,
             "payload": bytes(rec.payload) if with_payload else None,
         }
+        if decode_payload_text:
+            row["payload_text"] = (
+                decode_bytes(bytes(rec.payload), header_charset(rec.http_headers))
+                if rec.rec_type == "response"
+                else None
+            )
+        yield row
 
 
 class WarcMetrics:
@@ -170,6 +218,7 @@ def _parse_paths(
     metrics: WarcMetrics | None = None,
     local_temp_dir: str | None = None,
     batch_records: int = _BATCH_RECORDS,
+    decode_payload_text: bool = False,
 ) -> Iterator[pd.DataFrame]:
     """Stream pandas batches of records across a sequence of archives.
 
@@ -181,6 +230,7 @@ def _parse_paths(
     reference's generator had already yielded them before
     ArchiveLoadFailed fires, sparkcc.py:390-392).
     """
+    cols = _TEXT_COLS if decode_payload_text else _SCHEMA_COLS
     buf: list[dict] = []
     for path in paths:
         uri = _resolve(path, input_base_url)
@@ -190,11 +240,12 @@ def _parse_paths(
             for row in _record_rows(
                 path, uri, record_types, parse_http, with_payload,
                 local_temp_dir=local_temp_dir,
+                decode_payload_text=decode_payload_text,
             ):
                 buf.append(row)
                 in_buf += 1
                 if len(buf) >= batch_records:
-                    yield pd.DataFrame(buf, columns=_SCHEMA_COLS)
+                    yield pd.DataFrame(buf, columns=cols)
                     emitted += in_buf
                     buf = []
                     in_buf = 0
@@ -214,7 +265,7 @@ def _parse_paths(
                 metrics.records_processed += emitted
             continue
     if buf:
-        yield pd.DataFrame(buf, columns=_SCHEMA_COLS)
+        yield pd.DataFrame(buf, columns=cols)
 
 
 def warc_records(
@@ -228,12 +279,19 @@ def warc_records(
     metrics: WarcMetrics | None = None,
     local_temp_dir: str | None = None,
     batch_records: int = _BATCH_RECORDS,
+    decode_payload_text: bool = False,
 ) -> DataFrame:
     """Manifest (path to a text file of URIs, or an in-memory list) →
     records DataFrame with `WARC_RECORD_SCHEMA`.
 
     `local_temp_dir` spools remote archives to local disk before
     parsing (the reference's --local_temp_dir, sparkcc.py:308-318).
+
+    With ``decode_payload_text=True`` the output gains a
+    ``payload_text`` column (`WARC_TEXT_SCHEMA`): each response body
+    decoded by `decode_bytes` with the charset its first Content-Type
+    header declares (`header_charset`); NULL for every other record
+    type. ``payload`` keeps the raw bytes either way.
 
     Per-file fault tolerance matches the reference (sparkcc.py:390-392):
     an unreadable archive is skipped, never fatal. Records flow out in
@@ -261,9 +319,11 @@ def warc_records(
                 metrics=metrics,
                 local_temp_dir=local_temp_dir,
                 batch_records=batch_records,
+                decode_payload_text=decode_payload_text,
             )
 
-    return paths_df.mapInPandas(parse, WARC_RECORD_SCHEMA)
+    schema = WARC_TEXT_SCHEMA if decode_payload_text else WARC_RECORD_SCHEMA
+    return paths_df.mapInPandas(parse, schema)
 
 
 def fetch_warc_records(
@@ -301,13 +361,8 @@ def fetch_warc_records(
         num_input_partitions, "warc_filename"
     )
 
-    schema = WARC_RECORD_SCHEMA
-    out_cols = list(_SCHEMA_COLS)
-    if decode_payload_text:
-        schema = T.StructType(
-            schema.fields + [T.StructField("payload_text", T.StringType())]
-        )
-        out_cols.append("payload_text")
+    schema = WARC_TEXT_SCHEMA if decode_payload_text else WARC_RECORD_SCHEMA
+    out_cols = _TEXT_COLS if decode_payload_text else _SCHEMA_COLS
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -368,12 +423,15 @@ def header_values(name: str, col: str = "http_headers") -> F.Column:
 
 def is_html() -> F.Column:
     """MIME/HTML detection (P9, sparkcc.py:453-466): identified payload
-    type first, else Content-Type header contains an HTML MIME."""
+    type first, else Content-Type header contains an HTML MIME.
+
+    `get` returns NULL for a record without a Content-Type header;
+    `element_at` fails the task there under ANSI mode."""
     ct = header_values("content-type")
     return (
         F.col("identified_payload_type").isin("text/html", "application/xhtml+xml")
     ) | (
-        F.coalesce(F.element_at(ct, 1), F.lit("")).rlike(
+        F.coalesce(F.get(ct, 0), F.lit("")).rlike(
             "text/html|application/xhtml\\+xml"
         )
     )

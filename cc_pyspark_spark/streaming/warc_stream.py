@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cc_pyspark_spark.sources.warc import _SCHEMA_COLS, WARC_RECORD_SCHEMA, _record_rows
+from cc_pyspark_spark.sources.warc import WARC_RECORD_SCHEMA, _parse_paths
 
 
 def stream_warc_records(
@@ -30,6 +30,10 @@ def stream_warc_records(
     parse_http: bool = True,
     with_payload: bool = True,
 ) -> DataFrame:
+    """Streaming records DataFrame over the manifests published into
+    `manifest_dir`, parsed by the batch source's `_parse_paths`: the
+    same bounded record batches and the same skip semantics (a corrupt
+    or missing archive is skipped, never fatal to the query)."""
     paths = (
         spark.readStream.format("text")
         .load(manifest_dir)
@@ -39,14 +43,11 @@ def stream_warc_records(
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                try:
-                    rows.extend(
-                        _record_rows(path, path, record_types, parse_http, with_payload)
-                    )
-                except OSError:
-                    continue
-            yield pd.DataFrame(rows, columns=_SCHEMA_COLS)
+            yield from _parse_paths(
+                pdf["path"],
+                record_types=record_types,
+                parse_http=parse_http,
+                with_payload=with_payload,
+            )
 
     return paths.mapInPandas(parse, WARC_RECORD_SCHEMA)

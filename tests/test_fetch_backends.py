@@ -301,6 +301,66 @@ def test_fetch_decode_payload_text(spark, corpus):
         assert r["payload_text"] == decode_bytes(bytes(r["payload"]), "utf-8")
 
 
+def test_parse_time_decode_matches_jvm_charset_expression(spark, tmp_path):
+    """warc_records(decode_payload_text=True) picks the charset the JVM
+    expression it replaced extracts, so payload_text equals the decode
+    UDF over that expression on every record: case-sensitive
+    `charset=`, ASCII whitespace, first Content-Type header only."""
+    import pyspark.sql.functions as F
+
+    from cc_pyspark_spark.functions.encoding import decode_payload
+    from cc_pyspark_spark.sources.warc import header_charset
+    from cc_pyspark_spark.sources.warcio_lite import WarcWriter, http_response_block
+
+    ru = "Привет мир, это русский текст для проверки кодировки." * 3
+    jp = "こんにちは世界、これは日本語のテキストです。" * 3
+    html = "text/html"
+    cases = [  # (Content-Type headers, body, JVM charset, decoded text)
+        ([f"{html}; charset=ISO-8859-1"], "héllo wörld".encode("latin-1"),
+         "ISO-8859-1", "héllo wörld"),
+        ([f'{html}; charset="windows-1252"'], "price 5€".encode("cp1252"),
+         '"windows-1252"', "price 5€"),
+        ([f"{html}; Charset=utf-8"], "café".encode("latin-1"), "", "café"),
+        ([f"{html};\tcharset=shift_jis"], jp.encode("shift_jis"), "shift_jis", jp),
+        ([], "plain utf-8 ✓".encode(), "", "plain utf-8 ✓"),
+        ([f"{html}; charset=windows-1251", f"{html}; charset=koi8-r"],
+         ru.encode("cp1251"), "windows-1251", ru),
+        ([html], "héllo".encode("utf-16"), "", "héllo"),
+        ([html], ru.encode("cp1251"), "", ru),
+    ]
+    path = tmp_path / "charsets.warc.gz"
+    with open(path, "wb") as fh:
+        w = WarcWriter(fh, gzip_members=True)
+        for i, (cts, body, _, _) in enumerate(cases):
+            w.write_record(
+                "response",
+                http_response_block(body, headers=[("Content-Type", c) for c in cts]),
+                target_uri=f"http://charset.test/{i}",
+                content_type="application/http; msgtype=response",
+            )
+        w.write_record(
+            "metadata", b"fetchTimeMs: 1\r\n",
+            target_uri="http://charset.test/0", content_type="application/warc-fields",
+        )
+    recs = warc_records(spark, [str(path)], num_input_partitions=1, decode_payload_text=True)
+    # get(.., 0), not [0]: under ANSI mode [0] fails the task on the
+    # record whose HTTP headers hold no Content-Type
+    charset = F.regexp_extract(F.coalesce(F.expr(
+        "get(filter(http_headers, h -> lower(h.name) = 'content-type'), 0).value"
+    ), F.lit("")), "charset=([^;\\s]+)", 1)
+    rows = sorted(recs.select(
+        "warc_record_offset", "record_type", "http_headers", "payload_text",
+        charset.alias("charset"),
+        decode_payload(F.col("payload"), charset).alias("udf_text"),
+    ).collect())
+    assert [r["record_type"] for r in rows] == ["response"] * len(cases) + ["metadata"]
+    for r, (_, _, want_charset, want_text) in zip(rows, cases):
+        assert r["charset"] == want_charset
+        assert header_charset(r["http_headers"]) == want_charset
+        assert r["payload_text"] == r["udf_text"] == want_text
+    assert rows[-1]["payload_text"] is None
+
+
 # --------------------------------------------- WET path disambiguation
 
 

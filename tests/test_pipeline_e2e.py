@@ -69,7 +69,9 @@ def test_warc_to_documents_bridge(spark, corpus):
     from cc_pyspark_spark.plans.text import lang_id_col, quality_ok_col
     from cc_pyspark_spark.sources.warc import warc_records
 
-    recs = warc_records(spark, corpus["files"], num_input_partitions=2)
+    recs = warc_records(
+        spark, corpus["files"], num_input_partitions=2, decode_payload_text=True
+    )
     docs = warc_to_documents(recs, min_tokens=1)
     rows = docs.collect()
     assert rows, "fixture corpus produced no documents?"
@@ -85,3 +87,34 @@ def test_warc_to_documents_bridge(spark, corpus):
     assert all(r["lang_same"] and r["q_same"] for r in re_scored)
     # min_tokens gate actually gates
     assert warc_to_documents(recs, min_tokens=10_000).count() == 0
+
+
+def test_warc_to_documents_keeps_html_without_content_type(spark, tmp_path):
+    """Responses with HTTP headers but no Content-Type: the one known as
+    HTML by WARC-Identified-Payload-Type becomes a document (charset '',
+    the decode chain runs), the other is not HTML and is dropped. A JVM
+    `[0]` / `element_at(.., 1)` lookup of the header fails such a task
+    with INVALID_ARRAY_INDEX under ANSI mode."""
+    from cc_pyspark_spark.jobs.pipelines import warc_to_documents
+    from cc_pyspark_spark.sources.warcio_lite import WarcWriter, http_response_block
+
+    path = tmp_path / "no-content-type.warc.gz"
+    body = "<html><body>una página sin cabecera de tipo</body></html>"
+    with open(path, "wb") as fh:
+        w = WarcWriter(fh, gzip_members=True)
+        for uri, identified in (("http://no-ct.test/", "text/html"),
+                                ("http://no-ct.test/unknown", None)):
+            w.write_record(
+                "response",
+                http_response_block(body.encode("latin-1"), headers=[("Server", "x")]),
+                target_uri=uri,
+                content_type="application/http; msgtype=response",
+                identified_payload_type=identified,
+            )
+    recs = warc_records(
+        spark, [str(path)], num_input_partitions=1, decode_payload_text=True
+    )
+    rows = warc_to_documents(recs, min_tokens=1).select("url", "text").collect()
+    assert [tuple(r) for r in rows] == [
+        ("http://no-ct.test/", "una página sin cabecera de tipo")
+    ]

@@ -782,3 +782,37 @@ def test_capped_band_windows_live_inside_the_cache(spark):
         plan = plan_of(spark, name)
         head = plan.split("InMemoryTableScan")[0]
         assert "Window" not in head, (name, head)
+
+
+def test_warc_to_documents_runs_one_python_node(spark, monkeypatch):
+    """The payload is decoded inside the WARC parse: the optimized plan
+    of warc_to_documents' input holds the parse's MapInPandas and no
+    other Python node. A decode UDF over the records frame would show
+    up as ArrowEvalPython twice — once under the pushed-down token-gate
+    filter and once in the projection."""
+    from cc_pyspark_spark.jobs.pipelines import warc_to_documents
+    from cc_pyspark_spark.operators import ids
+    from cc_pyspark_spark.sources.warc import warc_records
+
+    class Captured(Exception):
+        pass
+
+    def capture(df, *args, **kwargs):
+        raise Captured(df)
+
+    monkeypatch.setattr(ids, "assign_sequential_ids", capture)
+    recs = warc_records(
+        spark, ["never-read.warc.gz"], num_input_partitions=1, decode_payload_text=True
+    )
+    with pytest.raises(Captured) as seen:
+        warc_to_documents(recs)
+    assert ids._python_nodes(seen.value.args[0]) == ["MapInPandas"]
+
+
+def test_warc_to_documents_needs_payload_text(spark):
+    from cc_pyspark_spark.jobs.pipelines import warc_to_documents
+    from cc_pyspark_spark.sources.warc import warc_records
+
+    recs = warc_records(spark, ["never-read.warc.gz"], num_input_partitions=1)
+    with pytest.raises(ValueError, match="decode_payload_text=True"):
+        warc_to_documents(recs)

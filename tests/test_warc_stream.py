@@ -7,6 +7,7 @@ import os
 import pytest
 
 from cc_pyspark_spark.sources.fixtures import generate_warc_corpus
+from cc_pyspark_spark.sources.warcio_lite import iter_warc_records
 from cc_pyspark_spark.streaming.warc_stream import stream_warc_records
 
 
@@ -59,3 +60,32 @@ def test_incremental_manifest_processing(spark, corpus, tmp_path):
     assert both.count() == both.dropDuplicates(
         ["warc_filename", "warc_record_offset"]
     ).count()
+
+
+def test_corrupt_archives_do_not_fail_the_stream(spark, corpus, tmp_path):
+    """A manifest listing a good archive next to corrupt ones: the
+    corrupt files are skipped, as in the batch source, and the query
+    finishes with exactly the good archive's records."""
+    good = corpus["files"][0]
+    bad_gzip = tmp_path / "bad.warc.gz"
+    bad_gzip.write_bytes(b"\x1f\x8b" + b"\x00garbage-not-a-gzip-stream")
+    bad_len = tmp_path / "badlen.warc"
+    bad_len.write_bytes(
+        b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: NaN\r\n\r\n"
+    )
+    mdir = tmp_path / "manifests"
+    mdir.mkdir()
+    (mdir / "m1.txt").write_text(f"{good}\n{bad_gzip}\n{bad_len}\n")
+    out = str(tmp_path / "records")
+    _drain_to_parquet(spark, str(mdir), str(tmp_path / "ckpt"), out)
+
+    got = sorted(
+        (r["warc_filename"], r["warc_record_offset"], r["target_uri"], bytes(r["payload"]))
+        for r in spark.read.parquet(out).collect()
+    )
+    with open(good, "rb") as f:
+        want = sorted(
+            (good, rec.offset, rec.target_uri, bytes(rec.payload))
+            for rec in iter_warc_records(f, record_types={"response"})
+        )
+    assert got and got == want
