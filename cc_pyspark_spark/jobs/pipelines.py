@@ -319,7 +319,9 @@ def wat_extract_links(records: DataFrame) -> DataFrame:
             urljoin_udf(F.col("base_url"), F.col("raw_link")).alias("t"),
         )
     )
-    # WARC redirect responses: Location header target (wat_extract_links.py:125-155)
+    # WARC redirect responses: Location header target (wat_extract_links.py:125-155).
+    # `get` gives NULL for a redirect without Location (dropped below);
+    # `element_at` fails the task there under ANSI mode.
     redirects = (
         records.filter(
             (F.col("record_type") == "response")
@@ -327,7 +329,7 @@ def wat_extract_links(records: DataFrame) -> DataFrame:
         )
         .select(
             F.col("target_uri").alias("s"),
-            F.element_at(header_values("location"), 1).alias("t"),
+            F.get(header_values("location"), 0).alias("t"),
         )
         .filter(F.col("t").isNotNull())
     )

@@ -1,9 +1,9 @@
-"""Registered query through the ``format("warc")`` Python DataSource.
+"""Registered queries over a ``warc_records`` scan.
 
-Every other registered query reads parquet; this one drives the
-Spark-4 Python Data Source API end to end (sources/warc_datasource.py:
-options → InputPartition-per-archive → executor-side parse → HTTP
-header/payload split) under the driver's correctness gate.
+Every other registered query reads parquet; these drive the WARC
+source end to end (sources/warc.py: manifest → archive-partitioned
+paths → executor-side parse with the parse-time record-type filter →
+HTTP header/payload split) under the driver's correctness gate.
 
 The WARC input is DERIVED from the `documents` table: each document
 becomes one HTTP response record whose URL encodes (lang, doc_id) and
@@ -14,7 +14,7 @@ fixture. Archive generation is a deterministic fixture-construction
 step (executor-side applyInPandas per shard, atomic-rename
 idempotent — r8 moved it off the driver so it scales with sf like any
 operator), NOT the measured operator; the measured path is the
-DataSource scan + parse.
+warc_records scan + parse.
 """
 
 from __future__ import annotations
@@ -33,8 +33,8 @@ from cc_pyspark_spark.plans.registry import register
 #: corpus built by an earlier code version.
 _FIXTURE_VERSION = 2  # v2: body links carry anchor text (wat_anchor_topk)
 
-#: Archives per derived corpus — one InputPartition each, so the scan
-#: parallelizes exactly as a real crawl segment would.
+#: Archives per derived corpus — the warc_records scan gets this many
+#: input partitions, so it parallelizes as a real crawl segment would.
 _N_FILES = 4
 
 _HTML_PREFIX = "<html><body>"
@@ -413,27 +413,21 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
        md5('{_HTML_PREFIX}' || text || '{_HTML_SUFFIX}') AS payload_md5
 FROM documents
 """,
-    description="WARC ingestion via the Spark-4 Python Data Source API "
-    "(format('warc')): the documents-derived archive corpus is scanned "
-    "one-InputPartition-per-file, records parse executor-side with the "
-    "HTTP payload split, and each response row carries its payload md5 "
-    "and byte length keyed by the (lang, doc_id) encoded in its URL. "
-    "Oracle recomputes url/length/md5 straight from `documents` — a "
-    "full round-trip check of writer, DataSource reader, and HTTP parse",
+    description="WARC ingestion via the warc_records scan: the "
+    "documents-derived archive corpus is partitioned by archive file, "
+    "response records parse executor-side with the HTTP payload split, "
+    "and each response row carries its payload md5 and byte length "
+    "keyed by the (lang, doc_id) encoded in its URL. Oracle recomputes "
+    "url/length/md5 straight from `documents` — a full round-trip check "
+    "of writer, warc_records scan, and HTTP parse",
     tags=("source", "warc"),
 )
 def warc_source_payload_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cc_pyspark_spark.sources.warc_datasource import (  # noqa: PLC0415
-        WarcDataSource,
-    )
+    from cc_pyspark_spark.sources.warc import warc_records  # noqa: PLC0415
 
-    spark.dataSource.register(WarcDataSource)
     manifest = derived_warc_manifest(spark, sf_dir)
-    df = (
-        spark.read.format("warc")
-        .option("manifest", manifest)
-        .option("record_types", "response")
-        .load()
+    df = warc_records(
+        spark, manifest, record_types={"response"}, num_input_partitions=_N_FILES
     )
     return df.select(
         F.regexp_extract("target_uri", r"/(\d+)$", 1)

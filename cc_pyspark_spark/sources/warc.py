@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cc_pyspark_spark.functions.encoding import decode_bytes
-from cc_pyspark_spark.sources.fetch import fetch_bytes, resolve
+from cc_pyspark_spark.sources.fetch import resolve
 from cc_pyspark_spark.sources.warcio_lite import iter_warc_records, read_record_at
 
 #: §1.4 record schema — one row per WARC/WAT/WET record.
@@ -71,14 +71,10 @@ WARC_RECORD_SCHEMA = T.StructType(
     ]
 )
 
-_SCHEMA_COLS = [f.name for f in WARC_RECORD_SCHEMA.fields]
-
 #: `WARC_RECORD_SCHEMA` plus the decoded body, for `decode_payload_text`.
 WARC_TEXT_SCHEMA = T.StructType(
     WARC_RECORD_SCHEMA.fields + [T.StructField("payload_text", T.StringType())]
 )
-
-_TEXT_COLS = [f.name for f in WARC_TEXT_SCHEMA.fields]
 
 #: The JVM's `regexp_extract(ct, 'charset=([^;\\s]+)', 1)`: case-sensitive,
 #: and ASCII `\s`, which is Java's whitespace class.
@@ -102,10 +98,36 @@ def header_charset(http_headers) -> str:
     return ""
 
 
-# Backend-dispatching helpers live in sources/fetch.py (local seek/read,
-# HTTP Range GET, injectable s3 client — sparkcc.py:291-342 parity).
-_resolve = resolve
-_fetch_bytes = fetch_bytes
+def _record_schema(decode_payload_text: bool) -> T.StructType:
+    return WARC_TEXT_SCHEMA if decode_payload_text else WARC_RECORD_SCHEMA
+
+
+def _record_row(rec, filename: str, with_payload: bool, text_charset: str | None) -> dict:
+    """One record as a `WARC_TEXT_SCHEMA` row.
+
+    `payload_text` is the body decoded with `text_charset` ('' when
+    none is declared), or NULL when `text_charset` is None. Callers
+    frame rows on their schema's columns, so a frame without
+    `payload_text` drops the key.
+    """
+    payload = bytes(rec.payload)
+    return {
+        "warc_filename": filename,
+        "warc_record_offset": rec.offset,
+        "warc_record_length": rec.length,
+        "record_type": rec.rec_type,
+        "content_type": rec.content_type,
+        "target_uri": rec.target_uri,
+        "warc_date": rec.headers.get("WARC-Date"),
+        "warc_ip_address": rec.headers.get("WARC-IP-Address"),
+        "identified_payload_type": rec.headers.get("WARC-Identified-Payload-Type"),
+        "http_status": rec.http_status,
+        "http_headers": rec.http_headers or None,
+        "payload": payload if with_payload else None,
+        "payload_text": (
+            None if text_charset is None else decode_bytes(payload, text_charset)
+        ),
+    }
 
 
 def _record_rows(
@@ -124,7 +146,9 @@ def _record_rows(
     backend's readable stream (`open_stream`), and the parser consumes
     either in 1 MiB slices, gzip member by member (sparkcc.py:381-410
     `ArchiveIterator`-over-spool semantics). Worker memory is bounded
-    by one record, not one archive.
+    by one record, not one archive. Response bodies are decoded with
+    the charset their Content-Type header declares (`header_charset`)
+    when `decode_payload_text` is set.
     """
     import contextlib  # noqa: PLC0415
     import os  # noqa: PLC0415
@@ -143,42 +167,14 @@ def _record_rows(
             stream = stack.enter_context(
                 contextlib.closing(open_stream(uri))
             )
-        yield from _stream_rows(
-            stream, filename, record_types, parse_http, with_payload,
-            decode_payload_text,
-        )
-
-
-def _stream_rows(
-    stream, filename, record_types, parse_http, with_payload,
-    decode_payload_text=False,
-):
-    for rec in iter_warc_records(
-        stream, parse_http=parse_http, record_types=record_types
-    ):
-        row = {
-            "warc_filename": filename,
-            "warc_record_offset": rec.offset,
-            "warc_record_length": rec.length,
-            "record_type": rec.rec_type,
-            "content_type": rec.content_type,
-            "target_uri": rec.target_uri,
-            "warc_date": rec.headers.get("WARC-Date"),
-            "warc_ip_address": rec.headers.get("WARC-IP-Address"),
-            "identified_payload_type": rec.headers.get(
-                "WARC-Identified-Payload-Type"
-            ),
-            "http_status": rec.http_status,
-            "http_headers": rec.http_headers or None,
-            "payload": bytes(rec.payload) if with_payload else None,
-        }
-        if decode_payload_text:
-            row["payload_text"] = (
-                decode_bytes(bytes(rec.payload), header_charset(rec.http_headers))
-                if rec.rec_type == "response"
-                else None
+        for rec in iter_warc_records(
+            stream, parse_http=parse_http, record_types=record_types
+        ):
+            decode = decode_payload_text and rec.rec_type == "response"
+            yield _record_row(
+                rec, filename, with_payload,
+                header_charset(rec.http_headers) if decode else None,
             )
-        yield row
 
 
 class WarcMetrics:
@@ -230,10 +226,10 @@ def _parse_paths(
     reference's generator had already yielded them before
     ArchiveLoadFailed fires, sparkcc.py:390-392).
     """
-    cols = _TEXT_COLS if decode_payload_text else _SCHEMA_COLS
+    cols = _record_schema(decode_payload_text).names
     buf: list[dict] = []
     for path in paths:
-        uri = _resolve(path, input_base_url)
+        uri = resolve(path, input_base_url)
         in_buf = 0  # current file's rows still sitting in buf
         emitted = 0
         try:
@@ -299,31 +295,51 @@ def warc_records(
     holding several 1 GB archives never materializes one of them.
     """
     if isinstance(manifest, str):
-        paths_df = spark.read.text(manifest).withColumnRenamed("value", "path")
+        lines = spark.read.text(manifest)
     else:
-        paths_df = spark.createDataFrame(
-            [(p,) for p in manifest], T.StructType([T.StructField("path", T.StringType())])
-        )
-    paths_df = paths_df.filter(F.trim("path") != "").repartition(
-        num_input_partitions, "path"
+        lines = spark.createDataFrame([(p,) for p in manifest], "value string")
+    return _manifest_records(
+        lines,
+        num_input_partitions=num_input_partitions,
+        decode_payload_text=decode_payload_text,
+        record_types=record_types,
+        parse_http=parse_http,
+        with_payload=with_payload,
+        input_base_url=input_base_url,
+        metrics=metrics,
+        local_temp_dir=local_temp_dir,
+        batch_records=batch_records,
     )
+
+
+def _manifest_records(
+    lines: DataFrame,
+    num_input_partitions: int | None,
+    decode_payload_text: bool,
+    **parse_options,
+) -> DataFrame:
+    """Manifest lines (the `value` column of a batch or streaming text
+    read) → records, parsed by `_parse_paths` in `mapInPandas`.
+
+    The one manifest rule for every WARC entry point: leading and
+    trailing whitespace is stripped (`trim` alone strips only spaces,
+    not tabs) and blank lines are dropped, so a padded line names the
+    same archive as a bare one. `num_input_partitions` hash-partitions
+    the paths first (None keeps the input's partitioning).
+    """
+    paths = lines.select(
+        F.regexp_replace("value", r"^\s+|\s+$", "").alias("path")
+    ).filter(F.col("path") != "")
+    if num_input_partitions is not None:
+        paths = paths.repartition(num_input_partitions, "path")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield from _parse_paths(
-                pdf["path"],
-                record_types=record_types,
-                parse_http=parse_http,
-                with_payload=with_payload,
-                input_base_url=input_base_url,
-                metrics=metrics,
-                local_temp_dir=local_temp_dir,
-                batch_records=batch_records,
-                decode_payload_text=decode_payload_text,
+                pdf["path"], decode_payload_text=decode_payload_text, **parse_options
             )
 
-    schema = WARC_TEXT_SCHEMA if decode_payload_text else WARC_RECORD_SCHEMA
-    return paths_df.mapInPandas(parse, schema)
+    return paths.mapInPandas(parse, _record_schema(decode_payload_text))
 
 
 def fetch_warc_records(
@@ -361,14 +377,13 @@ def fetch_warc_records(
         num_input_partitions, "warc_filename"
     )
 
-    schema = WARC_TEXT_SCHEMA if decode_payload_text else WARC_RECORD_SCHEMA
-    out_cols = _TEXT_COLS if decode_payload_text else _SCHEMA_COLS
+    schema = _record_schema(decode_payload_text)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for row in pdf.itertuples(index=False):
-                uri = _resolve(row.warc_filename, input_base_url)
+                uri = resolve(row.warc_filename, input_base_url)
                 try:
                     rec = read_record_at(
                         uri,
@@ -384,27 +399,13 @@ def fetch_warc_records(
                     continue
                 if metrics:
                     metrics.records_fetched += 1
-                out = {
-                    "warc_filename": row.warc_filename,
-                    "warc_record_offset": int(row.warc_record_offset),
-                    "warc_record_length": int(row.warc_record_length),
-                    "record_type": rec.rec_type,
-                    "content_type": rec.content_type,
-                    "target_uri": rec.target_uri or row.url,
-                    "warc_date": rec.headers.get("WARC-Date"),
-                    "warc_ip_address": rec.headers.get("WARC-IP-Address"),
-                    "identified_payload_type": rec.headers.get(
-                        "WARC-Identified-Payload-Type"
-                    ),
-                    "http_status": rec.http_status,
-                    "http_headers": rec.http_headers or None,
-                    "payload": bytes(rec.payload),
-                }
-                if decode_payload_text:
-                    charset = getattr(row, "content_charset", None) if has_charset else None
-                    out["payload_text"] = decode_bytes(bytes(rec.payload), charset)
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=out_cols)
+                if not rec.target_uri:
+                    rec.headers["WARC-Target-URI"] = row.url
+                charset = getattr(row, "content_charset", None) or ""
+                rows.append(_record_row(
+                    rec, row.warc_filename, True, charset if decode_payload_text else None
+                ))
+            yield pd.DataFrame(rows, columns=schema.names)
 
     return src.mapInPandas(fetch, schema)
 

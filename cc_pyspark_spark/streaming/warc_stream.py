@@ -14,13 +14,9 @@ comes from the checkpoint instead of manual table bookkeeping.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cc_pyspark_spark.sources.warc import WARC_RECORD_SCHEMA, _parse_paths
+from cc_pyspark_spark.sources.warc import _manifest_records
 
 
 def stream_warc_records(
@@ -31,23 +27,15 @@ def stream_warc_records(
     with_payload: bool = True,
 ) -> DataFrame:
     """Streaming records DataFrame over the manifests published into
-    `manifest_dir`, parsed by the batch source's `_parse_paths`: the
-    same bounded record batches and the same skip semantics (a corrupt
-    or missing archive is skipped, never fatal to the query)."""
-    paths = (
-        spark.readStream.format("text")
-        .load(manifest_dir)
-        .select(F.trim("value").alias("path"))
-        .filter(F.col("path") != "")
+    `manifest_dir`, read by the batch source's `_manifest_records`: the
+    same manifest rule, the same bounded record batches and the same
+    skip semantics (a corrupt or missing archive is skipped, never fatal
+    to the query)."""
+    return _manifest_records(
+        spark.readStream.format("text").load(manifest_dir),
+        num_input_partitions=None,
+        decode_payload_text=False,
+        record_types=record_types,
+        parse_http=parse_http,
+        with_payload=with_payload,
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield from _parse_paths(
-                pdf["path"],
-                record_types=record_types,
-                parse_http=parse_http,
-                with_payload=with_payload,
-            )
-
-    return paths.mapInPandas(parse, WARC_RECORD_SCHEMA)

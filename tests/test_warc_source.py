@@ -20,7 +20,12 @@ from cc_pyspark_spark.jobs import (
 )
 from cc_pyspark_spark.operators.graph import host_links_to_graph
 from cc_pyspark_spark.sources.fixtures import generate_warc_corpus
-from cc_pyspark_spark.sources.warc import fetch_warc_records, warc_records
+from cc_pyspark_spark.sources.warc import (
+    WARC_RECORD_SCHEMA,
+    WarcMetrics,
+    fetch_warc_records,
+    warc_records,
+)
 from cc_pyspark_spark.sources.warcio_lite import iter_warc_records
 
 
@@ -58,10 +63,31 @@ def test_record_counts_by_type(records_df, records_py):
 
 
 def test_record_type_pushdown(spark, corpus):
-    only_resp = warc_records(
-        spark, corpus["manifest"], record_types={"response"}, num_input_partitions=2
+    for record_types in ({"response"}, {"conversion"}):
+        df = warc_records(
+            spark, corpus["manifest"], record_types=record_types, num_input_partitions=2
+        )
+        assert {r[0] for r in df.select("record_type").distinct().collect()} == record_types
+
+
+def test_padded_manifest_lines_name_the_same_archives(spark, corpus, tmp_path):
+    """Whitespace around a manifest line is not part of the archive path:
+    a padded manifest parses the clean manifest's records and counts
+    every archive as processed, none as failed."""
+    padded = tmp_path / "padded.txt"
+    pads = [" ", "\t", " \t "]
+    padded.write_text(
+        "".join(f"{pads[i % 3]}{p}{pads[i % 3]}\n \n" for i, p in enumerate(corpus["files"]))
     )
-    assert only_resp.select("record_type").distinct().collect()[0][0] == "response"
+    key = ["warc_filename", "warc_record_offset", "record_type"]
+    clean = warc_records(spark, corpus["manifest"], num_input_partitions=2)
+    m = WarcMetrics(spark)
+    got = warc_records(spark, str(padded), num_input_partitions=2, metrics=m)
+    got_rows = {tuple(r) for r in got.select(*key).collect()}
+    assert got_rows == {tuple(r) for r in clean.select(*key).collect()}
+    assert got_rows
+    assert m.files_processed.value == len(corpus["files"])
+    assert m.files_failed.value == 0
 
 
 def test_ranged_fetch_matches_coordinates(spark, corpus):
@@ -212,6 +238,31 @@ def test_wat_page_links_parity(records_df, records_py):
     want = sorted(_expected_page_links(records_py))
     assert got == want
     assert len(got) > 10
+
+
+def test_redirect_without_location_is_dropped(spark):
+    """A 30x response with no Location header yields no edge and does
+    not fail the job under ANSI mode; a 301 with one is an edge."""
+    from cc_pyspark_spark.jobs.pipelines import wat_extract_links
+
+    def response(uri, status, headers):
+        return (
+            "f", 0, 1, "response", "application/http; msgtype=response", uri,
+            None, None, None, status, headers, b"",
+        )
+
+    records = spark.createDataFrame(
+        [
+            response("http://a.example.com/", 302, [("server", "x")]),
+            response(
+                "http://b.example.com/", 301,
+                [("location", "http://c.example.com/")],
+            ),
+        ],
+        WARC_RECORD_SCHEMA,
+    )
+    got = [(r["s"], r["t"]) for r in wat_extract_links(records).collect()]
+    assert got == [("http://b.example.com/", "http://c.example.com/")]
 
 
 def test_wat_links_and_graph(records_df):
