@@ -10,16 +10,24 @@ SQL warehouse table name (reference saveAsTable behavior,
 sparkcc.py:219-225). Writes coalesce to --num_output_partitions and
 sort within partitions when the job declares a clustering key
 (output clustering for compression, wat_extract_links.py:314-320).
+
+Every job ends in `_dispatch_job`'s one tail: write the job's frame,
+then print one JSON report line, `{"job", **facts, "output_rows"}`
+(plus the WARC parse counters for the crawl jobs).
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
+import re
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
+from cc_pyspark_spark.functions.text import TOKEN_PATTERN, tokenize
 from cc_pyspark_spark.jobs.pipelines import (
     html_tag_count,
     server_count,
@@ -30,6 +38,7 @@ from cc_pyspark_spark.jobs.pipelines import (
     word_count,
 )
 from cc_pyspark_spark.session import build_session
+from cc_pyspark_spark.sources.tables import _tab_joined
 from cc_pyspark_spark.sources.warc import WarcMetrics, warc_records
 
 #: name → (pipeline, output sort key, `warc_records` parse options).
@@ -48,40 +57,87 @@ JOBS = {
 }
 
 
-#: Jobs over a parquet documents/embeddings table (LLM-pipeline surface)
-#: — input is the table path, not a WARC manifest.
-DOC_JOBS = (
-    "dedup_documents",
-    "build_dedup_index",
-    "export_training_jsonl",
-    "quality_gate",
-    "pack_sequences",
-    "c4_clean",
-    "analyze_documents",
-    "zorder_table",
-    "dataset_card",
-    "dsir_select",
-    "coreset_select",
-    "container_probe",
-    "snapshot_diff",
-    "blocklist_filter",
-    "corpus_overlap",
-    "priority_sample",
-    "mine_hard_negatives",
-    "classifier_train",
-    "classifier_score",
-    "domain_cap",
-    "mix_select",
-    "soft_dedup",
-)
+#: Jobs over a parquet table (documents, embeddings, edges, …): name →
+#: `job(spark, table, args)` returning (frame to write or None when the
+#: job wrote its own output, output sort key, report facts). Filled by
+#: `_doc_job` below.
+DOC_JOBS: dict = {}
+
+
+def _doc_job(name: str):
+    def register(fn):
+        DOC_JOBS[name] = fn
+        return fn
+
+    return register
+
+
+def _rounds(args: argparse.Namespace, default: int) -> int:
+    """Per-algorithm --graph_rounds default that still honours an
+    explicit 0 (``or default`` would swallow it — the
+    label_propagation rounds=0 identity contract is CLI-reachable
+    only with a None-test; r11 ADVICE)."""
+    return args.graph_rounds if args.graph_rounds is not None else default
+
+
+def _op(module: str, name: str):
+    """`cc_pyspark_spark.operators.<module>.<name>`, imported when the
+    algorithm runs."""
+    return getattr(importlib.import_module(f"cc_pyspark_spark.operators.{module}"), name)
+
+
+#: graph_analyze --graph_algo → (operator call over (edges, args),
+#: canonical undirected edges?, output sort key).
+GRAPH_ALGOS = {
+    "pagerank": (
+        lambda e, a: _op("pagerank", "pagerank_fixed")(e, n_iter=_rounds(a, 10)),
+        False, ["id"],
+    ),
+    "pagerank_converged": (
+        lambda e, a: _op("pagerank", "pagerank_converged")(e), False, ["id"],
+    ),
+    "cc": (
+        lambda e, a: _op("pagerank", "cc_alternating_converged")(e), False, ["id"],
+    ),
+    "lpa": (
+        lambda e, a: _op("community", "label_propagation")(e, rounds=_rounds(a, 4)),
+        True, ["id"],
+    ),
+    "lpa_converged": (
+        lambda e, a: _op("community", "lpa_converged")(e), True, ["id"],
+    ),
+    "kcore": (
+        lambda e, a: _op("community", "kcore_converged")(e, k=a.kcore_k),
+        True, ["id"],
+    ),
+    "hits": (
+        lambda e, a: _op("pagerank", "hits_fixed")(e, rounds=_rounds(a, 2)),
+        False, ["id", "kind"],
+    ),
+    "hits_converged": (
+        lambda e, a: _op("pagerank", "hits_converged")(e), False, ["id", "kind"],
+    ),
+    "triangles": (
+        lambda e, a: _op("pagerank", "triangle_stats")(e), True, None,
+    ),
+}
+
+
+def _positive_int(text: str) -> int:
+    """argparse type of the count flags: an integer >= 1, so `args.x or
+    DEFAULT` falls back only when the flag is absent."""
+    try:
+        n = int(text)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"expected an integer >= 1, got {text!r}")
+    return n
 
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="cc-pyspark-spark")
-    p.add_argument(
-        "job",
-        choices=sorted([*JOBS, "hostlinks_to_graph", "graph_analyze", *DOC_JOBS]),
-    )
+    p.add_argument("job", choices=sorted([*JOBS, *DOC_JOBS]))
     p.add_argument("input", help="manifest of WARC/WAT/WET file URIs "
                    "(for hostlinks_to_graph: parquet edge table; for "
                    "dedup_documents/export_training_jsonl: parquet "
@@ -158,7 +214,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--pack_capacity",
-        type=int,
+        type=_positive_int,
         default=None,
         help="pack_sequences: max tokens per pack (default "
         "plans.curation.PACK_CAPACITY)",
@@ -224,7 +280,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--coreset_k",
-        type=int,
+        type=_positive_int,
         default=None,
         help="coreset_select: number of greedy farthest-point centers "
         "(default plans.similarity.KCENTER_K; center lineage "
@@ -252,7 +308,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--kmv_k",
-        type=int,
+        type=_positive_int,
         default=None,
         help="corpus_overlap: KMV sketch size (default "
         "plans.sketches.KMV_K; rel-err ~ 1/sqrt(k-1); k larger than "
@@ -261,17 +317,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--graph_algo",
         default="pagerank",
-        choices=[
-            "pagerank",
-            "pagerank_converged",
-            "cc",
-            "lpa",
-            "lpa_converged",
-            "kcore",
-            "hits",
-            "hits_converged",
-            "triangles",
-        ],
+        choices=list(GRAPH_ALGOS),
         help="graph_analyze: algorithm over the (s, t) integer edge "
         "table (the hostlinks_to_graph edges output). pagerank/hits "
         "use the directed edges; cc/lpa/kcore/triangles canonicalize "
@@ -296,7 +342,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--sample_k",
-        type=int,
+        type=_positive_int,
         default=None,
         help="priority_sample: kept-set size (default "
         "plans.curation.PRIORITY_SAMPLE_K); with --keep_selected the "
@@ -305,7 +351,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--cap_k",
-        type=int,
+        type=_positive_int,
         default=None,
         help="domain_cap: documents kept per source domain (default "
         "plans.curation.DOMAIN_CAP_K); with --keep_selected the full "
@@ -313,7 +359,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--mix_budget",
-        type=int,
+        type=_positive_int,
         default=None,
         help="mix_select: total token budget apportioned across "
         "language strata (default plans.curation.MIX_EXEC_BUDGET); "
@@ -323,10 +369,19 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def write_output(df: DataFrame, args: argparse.Namespace, sort_cols) -> None:
-    out = df.coalesce(args.num_output_partitions)
+def write_output(
+    df: DataFrame, args: argparse.Namespace, sort_cols, path: str | None = None
+) -> int:
+    """Write `df` to `path` (default: the job's output) and return its
+    row count, observed at the write. `text` output is one tab-joined
+    line per row (the write_text_gz rule)."""
+    obs = Observation("job_metrics")
+    out = df.observe(obs, F.count(F.lit(1)).alias("output_rows"))
+    out = out.coalesce(args.num_output_partitions)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
+    if args.output_format == "text":
+        out = _tab_joined(out)
     writer = out.write.format(args.output_format).option(
         "compression", args.output_compression
     )
@@ -334,383 +389,26 @@ def write_output(df: DataFrame, args: argparse.Namespace, sort_cols) -> None:
         k, _, v = kv.partition("=")
         writer = writer.option(k, v)
     if args.save_as_table:
-        writer.saveAsTable(args.output)
+        writer.saveAsTable(path or args.output)
     else:
-        writer.mode("overwrite").save(args.output)
+        writer.mode("overwrite").save(path or args.output)
+    return obs.get["output_rows"]
 
 
+def _join_back(args, table: DataFrame, frame: DataFrame, *cols, where=None):
+    """With --keep_selected, the full `table` rows of the documents
+    `frame` kept (the rows `where` selects, if given) plus its `cols`;
+    otherwise `frame` itself."""
+    if not args.keep_selected:
+        return frame
+    kept = frame if where is None else frame.filter(where)
+    return table.join(kept.select("doc_id", *cols), "doc_id")
 
-def _run_doc_job(spark, args: argparse.Namespace) -> int:
-    """LLM-pipeline jobs over a parquet documents/embeddings table."""
+
+@_doc_job("dedup_documents")
+def _dedup_documents(spark, table, args):
     from cc_pyspark_spark.operators import dedup as D  # noqa: PLC0415
 
-    table = spark.read.parquet(args.input)
-    if args.job == "build_dedup_index":
-        from cc_pyspark_spark.operators.dedup import (  # noqa: PLC0415
-            content_fingerprints,
-            minhash_band_index,
-        )
-
-        base = args.output.rstrip("/")
-        content_fingerprints(table).write.mode("overwrite").parquet(f"{base}/fp")
-        minhash_band_index(table).write.mode("overwrite").parquet(f"{base}/bands")
-        print(json.dumps({"job": args.job, "index": base}))
-        return 0
-    if args.job == "analyze_documents":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.functions.text import tokenize  # noqa: PLC0415
-        from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
-            bigram_lm_scores_frame,
-            lang_id_col,
-            quality_ok_col,
-        )
-
-        # One-pass per-document analysis: heuristics are pure columns;
-        # the LM score adds the corpus-trained bigram model (left join —
-        # <2-token docs keep NULL LM columns rather than vanishing).
-        sig = table.select(
-            "doc_id",
-            lang_id_col("text").alias("lang_pred"),
-            quality_ok_col("text").alias("quality_ok"),
-            F.size(tokenize("text")).cast("bigint").alias("n_tokens"),
-            F.length("text").cast("bigint").alias("n_chars"),
-            F.md5(F.col("text").cast("binary")).alias("fp_md5"),
-        )
-        df = sig.join(bigram_lm_scores_frame(table), "doc_id", "left")
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "quality_gate":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.plans.text import gopher_signals_frame  # noqa: PLC0415
-
-        df = gopher_signals_frame(table)
-        if args.gate_filter:
-            df = df.filter(F.col("gopher_pass") == 1)
-        write_output(df, args, None)
-        print(json.dumps({"job": args.job, "gate_filter": args.gate_filter}))
-        return 0
-    if args.job == "pack_sequences":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            PACK_CAPACITY,
-            pack_sequences_frame,
-        )
-
-        df = pack_sequences_frame(
-            table,
-            capacity=args.pack_capacity or PACK_CAPACITY,
-            tokenizer=args.tokenizer,
-        )
-        write_output(df, args, ["lang", "shard", "doc_id"])
-        print(json.dumps({"job": args.job, "tokenizer": args.tokenizer}))
-        return 0
-    if args.job == "c4_clean":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.plans.c4 import c4_clean_frame  # noqa: PLC0415
-
-        df = c4_clean_frame(table)
-        if args.gate_filter:
-            df = df.filter(F.col("c4_pass") == 1)
-        write_output(df, args, None)
-        print(json.dumps({"job": args.job, "gate_filter": args.gate_filter}))
-        return 0
-    if args.job == "dataset_card":
-        from cc_pyspark_spark.plans.curation import dataset_card_frame  # noqa: PLC0415
-
-        write_output(dataset_card_frame(table), args, None)
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "coreset_select":
-        from cc_pyspark_spark.plans.similarity import (  # noqa: PLC0415
-            KCENTER_K,
-            kcenter_coreset_frame,
-        )
-
-        k = args.coreset_k or KCENTER_K
-        df = kcenter_coreset_frame(table, k=k)
-        write_output(df, args, ["vec_id"])
-        print(json.dumps({"job": args.job, "k": k}))
-        return 0
-    if args.job == "classifier_score":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
-            classifier_score_frame,
-        )
-
-        if not args.model_path:
-            raise SystemExit("classifier_score requires --model_path MODEL")
-        model = spark.read.parquet(args.model_path)
-        df = classifier_score_frame(table, model)
-        if args.score_filter:
-            df = df.filter(F.col("pred")).drop("pred")
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job, "filter": args.score_filter}))
-        return 0
-    if args.job == "classifier_train":
-        from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
-            CLS_TRAIN_LR,
-            CLS_TRAIN_ROUNDS,
-            classifier_train_frame,
-        )
-
-        df = classifier_train_frame(spark, table)
-        write_output(df, args, ["feature_idx"])
-        print(json.dumps({
-            "job": args.job,
-            "rounds": CLS_TRAIN_ROUNDS,
-            "lr": CLS_TRAIN_LR,
-        }))
-        return 0
-    if args.job == "snapshot_diff":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            snapshot_diff_frame,
-        )
-
-        if not args.diff_against:
-            raise SystemExit("snapshot_diff requires --diff_against NEW_PATH")
-        new = spark.read.parquet(args.diff_against)
-        df = snapshot_diff_frame(
-            table, new, key=args.key_col, payload=args.payload_col
-        )
-        write_output(df, args, [args.key_col])
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "container_probe":
-        from cc_pyspark_spark.operators.multimodal import (  # noqa: PLC0415
-            probe_containers,
-        )
-
-        df = probe_containers(
-            table, id_col=args.blob_id_col, blob_col=args.blob_col
-        )
-        write_output(df, args, [args.blob_id_col])
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "blocklist_filter":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
-            BLOCKLIST_PHRASES,
-            blocklist_hits_frame,
-        )
-
-        if args.blocklist_file:
-            import re as _re  # noqa: PLC0415
-
-            from cc_pyspark_spark.functions.text import (  # noqa: PLC0415
-                TOKEN_PATTERN,
-            )
-
-            # The match side runs over tokenize()-normalized text
-            # (lowercase tokens, single-space joined) — phrases must
-            # go through the SAME normalization or 'Table Scan' /
-            # 'hash-join' could never match and the gate fails OPEN.
-            with open(args.blocklist_file) as f:
-                phrases = tuple(
-                    dict.fromkeys(  # dedup, preserve order
-                        " ".join(_re.findall(TOKEN_PATTERN, line.lower()))
-                        for line in f
-                    )
-                )
-            phrases = tuple(p for p in phrases if p)
-            if not phrases:
-                raise SystemExit(
-                    f"blocklist file {args.blocklist_file} contains no "
-                    "usable phrases after normalization"
-                )
-        else:
-            phrases = BLOCKLIST_PHRASES
-        scored = blocklist_hits_frame(table, phrases)
-        if args.drop_matched:
-            clean = scored.filter(F.col("n_hits") == 0).select("doc_id")
-            df = table.join(clean, "doc_id")
-        else:
-            df = scored
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job, "n_phrases": len(phrases)}))
-        return 0
-    if args.job == "corpus_overlap":
-        from cc_pyspark_spark.plans.sketches import (  # noqa: PLC0415
-            KMV_K,
-            theta_sketch_pairs_frame,
-        )
-
-        k = args.kmv_k if args.kmv_k is not None else KMV_K
-        if k < 1:
-            raise SystemExit("--kmv_k must be >= 1")
-        df = theta_sketch_pairs_frame(
-            table, k=k, set_col=args.overlap_set_col
-        )
-        write_output(df, args, ["src_a", "src_b"])
-        print(json.dumps({"job": args.job, "k": k}))
-        return 0
-    if args.job == "priority_sample":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            PRIORITY_SAMPLE_K,
-            priority_sample_frame,
-        )
-
-        k = args.sample_k if args.sample_k is not None else PRIORITY_SAMPLE_K
-        if k < 1:
-            raise SystemExit("--sample_k must be >= 1")
-        kept = priority_sample_frame(table, k=k)
-        if args.keep_selected:
-            df = table.join(
-                kept.select("doc_id", "adj_weight"), "doc_id"
-            )
-        else:
-            df = kept
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job, "k": k}))
-        return 0
-    if args.job == "domain_cap":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            DOMAIN_CAP_K,
-            domain_cap_frame,
-        )
-
-        k = args.cap_k if args.cap_k is not None else DOMAIN_CAP_K
-        if k < 1:
-            raise SystemExit("--cap_k must be >= 1")
-        kept = domain_cap_frame(table, k)
-        if args.keep_selected:
-            df = table.join(kept.select("doc_id", "rk"), "doc_id")
-        else:
-            df = kept
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job, "cap_k": k}))
-        return 0
-    if args.job == "mix_select":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            MIX_EXEC_BUDGET,
-            mix_execute_frame,
-        )
-
-        budget = (
-            args.mix_budget if args.mix_budget is not None else MIX_EXEC_BUDGET
-        )
-        if budget < 1:
-            raise SystemExit("--mix_budget must be >= 1")
-        kept = mix_execute_frame(table, budget)
-        if args.keep_selected:
-            df = table.join(kept.select("doc_id", "cum_tok"), "doc_id")
-        else:
-            df = kept
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job, "mix_budget": budget}))
-        return 0
-    if args.job == "soft_dedup":
-        from cc_pyspark_spark.operators.dedup import (  # noqa: PLC0415
-            minhash_lsh_pairs,
-            soft_dedup_weights,
-        )
-
-        pairs = minhash_lsh_pairs(table, threshold=args.jaccard_threshold)
-        weights = soft_dedup_weights(table, pairs)
-        if args.keep_selected:
-            # full rows annotated with their training weight
-            df = table.join(
-                weights.select("doc_id", "cluster_size", "weight"), "doc_id"
-            )
-        else:
-            df = weights
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "mine_hard_negatives":
-        from cc_pyspark_spark.plans.similarity import (  # noqa: PLC0415
-            sim_hard_negatives_frame,
-        )
-
-        df = sim_hard_negatives_frame(table)
-        write_output(df, args, ["q_id", "rnk"])
-        print(json.dumps({"job": args.job}))
-        return 0
-    if args.job == "dsir_select":
-        from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
-            DSIR_TARGET_LANG,
-            dsir_importance_frame,
-        )
-
-        target = args.dsir_target_lang or DSIR_TARGET_LANG
-        scored = dsir_importance_frame(table, target_lang=target)
-        if args.keep_selected:
-            # emit the FULL document rows for the above-median half —
-            # the resampled training subset, ready for export jobs
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            kept = scored.filter(F.col("selected")).select(
-                "doc_id", "weight"
-            )
-            df = table.join(kept, "doc_id")
-        else:
-            df = scored
-        write_output(df, args, ["doc_id"])
-        print(json.dumps({
-            "job": args.job,
-            "target_lang": target,
-            "keep_selected": args.keep_selected,
-        }))
-        return 0
-    if args.job == "zorder_table":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cc_pyspark_spark.sources.tables import write_zordered  # noqa: PLC0415
-
-        if not args.zorder_cols:
-            raise SystemExit("zorder_table needs --zorder_cols a,b[,c]")
-        cols = [c.strip() for c in args.zorder_cols.split(",") if c.strip()]
-        bits = 63 // len(cols) if 63 // len(cols) < 16 else 16
-        # RANGE-scale each column into [0, 2^bits): (v - min) spread
-        # over the actual value range. A modulo here would destroy the
-        # min/max pruning the job exists to create — every output file
-        # would span the full raw domain once values exceed 2^bits
-        # (code-review r7). Min/max come from a 1-row broadcast; exact
-        # while (range * 2^bits) fits BIGINT (range <= ~1.4e14).
-        stats = table.agg(
-            *[
-                f
-                for c in cols
-                for f in (
-                    F.min(F.col(c).cast("bigint")).alias(f"__mn_{c}"),
-                    F.max(F.col(c).cast("bigint")).alias(f"__mx_{c}"),
-                )
-            ]
-        )
-        scaled = table.crossJoin(F.broadcast(stats)).select(
-            *table.columns,
-            *[
-                F.expr(
-                    f"CAST(((cast({c} AS bigint) - __mn_{c}) * {1 << bits}) "
-                    f"div (__mx_{c} - __mn_{c} + 1) AS BIGINT)"
-                ).alias(f"__zs_{c}")
-                for c in cols
-            ],
-        )
-        write_zordered(
-            scaled,
-            args.output,
-            [f"__zs_{c}" for c in cols],
-            bits=bits,
-            num_files=args.num_output_partitions,
-            drop_zcols=True,
-        )
-        print(json.dumps({"job": args.job, "cols": cols, "bits": bits}))
-        return 0
-    if args.job == "export_training_jsonl":
-        from cc_pyspark_spark.operators.export import export_training_jsonl  # noqa: PLC0415
-
-        n = export_training_jsonl(
-            table, args.output,
-            min_tokens=args.min_tokens, max_tokens=args.max_tokens,
-            n_shards=args.num_output_partitions,
-        )
-        print(json.dumps({"job": args.job, "exported_docs": n}))
-        return 0
     method = args.dedup_method
     if method == "exact":
         df = D.exact_dedup_keep_first(table, ["text"], "doc_id")
@@ -736,27 +434,369 @@ def _run_doc_job(spark, args: argparse.Namespace) -> int:
             multiprobe=1 if args.lsh_multiprobe else 0,
             **kw,
         )
-    elif method == "incremental_exact":
+    elif method.startswith("incremental_"):
         if not args.corpus_index:
-            raise SystemExit("incremental_exact needs --corpus_index")
-        seen = spark.read.parquet(args.corpus_index.rstrip("/") + "/fp")
-        df = D.incremental_exact_dedup(table, seen)
-    elif method == "incremental_minhash":
-        if not args.corpus_index:
-            raise SystemExit("incremental_minhash needs --corpus_index")
-        idx = spark.read.parquet(args.corpus_index.rstrip("/") + "/bands")
-        df = D.incremental_minhash_candidates(table, idx)
+            raise SystemExit(f"{method} needs --corpus_index")
+        base = args.corpus_index.rstrip("/")
+        if method == "incremental_exact":
+            df = D.incremental_exact_dedup(table, spark.read.parquet(f"{base}/fp"))
+        else:
+            idx = spark.read.parquet(f"{base}/bands")
+            df = D.incremental_minhash_candidates(table, idx)
     else:  # cluster
         pairs = D.minhash_lsh_pairs(table, threshold=args.jaccard_threshold)
         df = D.canonical_survivors(table, pairs)
-    from pyspark.sql import Observation  # noqa: PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
+    return df, None, {"method": method}
 
-    obs = Observation("doc_job_metrics")
-    df = df.observe(obs, F.count(F.lit(1)).alias("output_rows"))
-    write_output(df, args, None)
-    print(json.dumps({"job": args.job, "method": method, **obs.get}))
-    return 0
+
+@_doc_job("build_dedup_index")
+def _build_dedup_index(spark, table, args):
+    from cc_pyspark_spark.operators.dedup import (  # noqa: PLC0415
+        content_fingerprints,
+        minhash_band_index,
+    )
+
+    base = args.output.rstrip("/")
+    content_fingerprints(table).write.mode("overwrite").parquet(f"{base}/fp")
+    minhash_band_index(table).write.mode("overwrite").parquet(f"{base}/bands")
+    return None, None, {"index": base}
+
+
+@_doc_job("export_training_jsonl")
+def _export_training_jsonl(spark, table, args):
+    from cc_pyspark_spark.operators.export import export_training_jsonl  # noqa: PLC0415
+
+    n = export_training_jsonl(
+        table, args.output,
+        min_tokens=args.min_tokens, max_tokens=args.max_tokens,
+        n_shards=args.num_output_partitions,
+    )
+    return None, None, {"exported_docs": n}
+
+
+@_doc_job("analyze_documents")
+def _analyze_documents(spark, table, args):
+    from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
+        bigram_lm_scores_frame,
+        lang_id_col,
+        quality_ok_col,
+    )
+
+    # One-pass per-document analysis: heuristics are pure columns;
+    # the LM score adds the corpus-trained bigram model (left join —
+    # <2-token docs keep NULL LM columns rather than vanishing).
+    sig = table.select(
+        "doc_id",
+        lang_id_col("text").alias("lang_pred"),
+        quality_ok_col("text").alias("quality_ok"),
+        F.size(tokenize("text")).cast("bigint").alias("n_tokens"),
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.md5(F.col("text").cast("binary")).alias("fp_md5"),
+    )
+    return sig.join(bigram_lm_scores_frame(table), "doc_id", "left"), ["doc_id"], {}
+
+
+@_doc_job("quality_gate")
+def _quality_gate(spark, table, args):
+    from cc_pyspark_spark.plans.text import gopher_signals_frame  # noqa: PLC0415
+
+    df = gopher_signals_frame(table)
+    if args.gate_filter:
+        df = df.filter(F.col("gopher_pass") == 1)
+    return df, None, {"gate_filter": args.gate_filter}
+
+
+@_doc_job("c4_clean")
+def _c4_clean(spark, table, args):
+    from cc_pyspark_spark.plans.c4 import c4_clean_frame  # noqa: PLC0415
+
+    df = c4_clean_frame(table)
+    if args.gate_filter:
+        df = df.filter(F.col("c4_pass") == 1)
+    return df, None, {"gate_filter": args.gate_filter}
+
+
+@_doc_job("pack_sequences")
+def _pack_sequences(spark, table, args):
+    from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
+        PACK_CAPACITY,
+        pack_sequences_frame,
+    )
+
+    df = pack_sequences_frame(
+        table,
+        capacity=args.pack_capacity or PACK_CAPACITY,
+        tokenizer=args.tokenizer,
+    )
+    return df, ["lang", "shard", "doc_id"], {"tokenizer": args.tokenizer}
+
+
+@_doc_job("dataset_card")
+def _dataset_card(spark, table, args):
+    from cc_pyspark_spark.plans.curation import dataset_card_frame  # noqa: PLC0415
+
+    return dataset_card_frame(table), None, {}
+
+
+@_doc_job("coreset_select")
+def _coreset_select(spark, table, args):
+    from cc_pyspark_spark.plans.similarity import (  # noqa: PLC0415
+        KCENTER_K,
+        kcenter_coreset_frame,
+    )
+
+    k = args.coreset_k or KCENTER_K
+    return kcenter_coreset_frame(table, k=k), ["vec_id"], {"k": k}
+
+
+@_doc_job("classifier_train")
+def _classifier_train(spark, table, args):
+    from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
+        CLS_TRAIN_LR,
+        CLS_TRAIN_ROUNDS,
+        classifier_train_frame,
+    )
+
+    facts = {"rounds": CLS_TRAIN_ROUNDS, "lr": CLS_TRAIN_LR}
+    return classifier_train_frame(spark, table), ["feature_idx"], facts
+
+
+@_doc_job("classifier_score")
+def _classifier_score(spark, table, args):
+    from cc_pyspark_spark.plans.text import classifier_score_frame  # noqa: PLC0415
+
+    if not args.model_path:
+        raise SystemExit("classifier_score requires --model_path MODEL")
+    df = classifier_score_frame(table, spark.read.parquet(args.model_path))
+    if args.score_filter:
+        df = df.filter(F.col("pred")).drop("pred")
+    return df, ["doc_id"], {"filter": args.score_filter}
+
+
+@_doc_job("snapshot_diff")
+def _snapshot_diff(spark, table, args):
+    from cc_pyspark_spark.plans.curation import snapshot_diff_frame  # noqa: PLC0415
+
+    if not args.diff_against:
+        raise SystemExit("snapshot_diff requires --diff_against NEW_PATH")
+    df = snapshot_diff_frame(
+        table, spark.read.parquet(args.diff_against),
+        key=args.key_col, payload=args.payload_col,
+    )
+    return df, [args.key_col], {}
+
+
+@_doc_job("container_probe")
+def _container_probe(spark, table, args):
+    from cc_pyspark_spark.operators.multimodal import probe_containers  # noqa: PLC0415
+
+    df = probe_containers(table, id_col=args.blob_id_col, blob_col=args.blob_col)
+    return df, [args.blob_id_col], {}
+
+
+@_doc_job("blocklist_filter")
+def _blocklist_filter(spark, table, args):
+    from cc_pyspark_spark.plans.text import (  # noqa: PLC0415
+        BLOCKLIST_PHRASES,
+        blocklist_hits_frame,
+    )
+
+    phrases = BLOCKLIST_PHRASES
+    if args.blocklist_file:
+        # The match side runs over tokenize()-normalized text
+        # (lowercase tokens, single-space joined) — phrases must
+        # go through the SAME normalization or 'Table Scan' /
+        # 'hash-join' could never match and the gate fails OPEN.
+        with open(args.blocklist_file) as f:
+            phrases = tuple(
+                dict.fromkeys(  # dedup, preserve order
+                    " ".join(re.findall(TOKEN_PATTERN, line.lower()))
+                    for line in f
+                )
+            )
+        phrases = tuple(p for p in phrases if p)
+        if not phrases:
+            raise SystemExit(
+                f"blocklist file {args.blocklist_file} contains no "
+                "usable phrases after normalization"
+            )
+    df = blocklist_hits_frame(table, phrases)
+    if args.drop_matched:
+        df = table.join(df.filter(F.col("n_hits") == 0).select("doc_id"), "doc_id")
+    return df, ["doc_id"], {"n_phrases": len(phrases)}
+
+
+@_doc_job("corpus_overlap")
+def _corpus_overlap(spark, table, args):
+    from cc_pyspark_spark.plans.sketches import (  # noqa: PLC0415
+        KMV_K,
+        theta_sketch_pairs_frame,
+    )
+
+    k = args.kmv_k or KMV_K
+    df = theta_sketch_pairs_frame(table, k=k, set_col=args.overlap_set_col)
+    return df, ["src_a", "src_b"], {"k": k}
+
+
+@_doc_job("priority_sample")
+def _priority_sample(spark, table, args):
+    from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
+        PRIORITY_SAMPLE_K,
+        priority_sample_frame,
+    )
+
+    k = args.sample_k or PRIORITY_SAMPLE_K
+    df = _join_back(args, table, priority_sample_frame(table, k=k), "adj_weight")
+    return df, ["doc_id"], {"k": k}
+
+
+@_doc_job("domain_cap")
+def _domain_cap(spark, table, args):
+    from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
+        DOMAIN_CAP_K,
+        domain_cap_frame,
+    )
+
+    k = args.cap_k or DOMAIN_CAP_K
+    df = _join_back(args, table, domain_cap_frame(table, k), "rk")
+    return df, ["doc_id"], {"cap_k": k}
+
+
+@_doc_job("mix_select")
+def _mix_select(spark, table, args):
+    from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
+        MIX_EXEC_BUDGET,
+        mix_execute_frame,
+    )
+
+    budget = args.mix_budget or MIX_EXEC_BUDGET
+    df = _join_back(args, table, mix_execute_frame(table, budget), "cum_tok")
+    return df, ["doc_id"], {"mix_budget": budget}
+
+
+@_doc_job("soft_dedup")
+def _soft_dedup(spark, table, args):
+    from cc_pyspark_spark.operators.dedup import (  # noqa: PLC0415
+        minhash_lsh_pairs,
+        soft_dedup_weights,
+    )
+
+    pairs = minhash_lsh_pairs(table, threshold=args.jaccard_threshold)
+    # with --keep_selected: full rows annotated with their training weight
+    df = _join_back(
+        args, table, soft_dedup_weights(table, pairs), "cluster_size", "weight"
+    )
+    return df, ["doc_id"], {}
+
+
+@_doc_job("mine_hard_negatives")
+def _mine_hard_negatives(spark, table, args):
+    from cc_pyspark_spark.plans.similarity import sim_hard_negatives_frame  # noqa: PLC0415
+
+    return sim_hard_negatives_frame(table), ["q_id", "rnk"], {}
+
+
+@_doc_job("dsir_select")
+def _dsir_select(spark, table, args):
+    from cc_pyspark_spark.plans.curation import (  # noqa: PLC0415
+        DSIR_TARGET_LANG,
+        dsir_importance_frame,
+    )
+
+    target = args.dsir_target_lang or DSIR_TARGET_LANG
+    # with --keep_selected: the FULL document rows of the above-median
+    # half — the resampled training subset, ready for export jobs
+    df = _join_back(
+        args, table, dsir_importance_frame(table, target_lang=target),
+        "weight", where=F.col("selected"),
+    )
+    return df, ["doc_id"], {"target_lang": target, "keep_selected": args.keep_selected}
+
+
+@_doc_job("zorder_table")
+def _zorder_table(spark, table, args):
+    from cc_pyspark_spark.sources.tables import write_zordered  # noqa: PLC0415
+
+    cols = [c.strip() for c in (args.zorder_cols or "").split(",") if c.strip()]
+    if not cols:
+        raise SystemExit("zorder_table needs --zorder_cols a,b[,c]")
+    bits = min(63 // len(cols), 16)
+    # RANGE-scale each column into [0, 2^bits): (v - min) spread
+    # over the actual value range. A modulo here would destroy the
+    # min/max pruning the job exists to create — every output file
+    # would span the full raw domain once values exceed 2^bits
+    # (code-review r7). Min/max come from a 1-row broadcast; exact
+    # while (range * 2^bits) fits BIGINT (range <= ~1.4e14).
+    stats = table.agg(
+        *[
+            f
+            for c in cols
+            for f in (
+                F.min(F.col(c).cast("bigint")).alias(f"__mn_{c}"),
+                F.max(F.col(c).cast("bigint")).alias(f"__mx_{c}"),
+            )
+        ]
+    )
+    scaled = table.crossJoin(F.broadcast(stats)).select(
+        *table.columns,
+        *[
+            F.expr(
+                f"CAST(((cast({c} AS bigint) - __mn_{c}) * {1 << bits}) "
+                f"div (__mx_{c} - __mn_{c} + 1) AS BIGINT)"
+            ).alias(f"__zs_{c}")
+            for c in cols
+        ],
+    )
+    write_zordered(
+        scaled,
+        args.output,
+        [f"__zs_{c}" for c in cols],
+        bits=bits,
+        num_files=args.num_output_partitions,
+        drop_zcols=True,
+    )
+    return None, None, {"cols": cols, "bits": bits}
+
+
+@_doc_job("hostlinks_to_graph")
+def _hostlinks_to_graph(spark, table, args):
+    """(s, t) host-name edge table → <output>/vertices + <output>/edges."""
+    from cc_pyspark_spark.operators.graph import host_links_to_graph  # noqa: PLC0415
+
+    if args.save_as_table:
+        raise SystemExit(
+            "hostlinks_to_graph writes two outputs (vertices, edges); "
+            "--save_as_table takes one table name"
+        )
+    vertices, edges = host_links_to_graph(
+        table,
+        validate_host_names=args.validate_host_names,
+        normalize_host_names=args.normalize_host_names,
+    )
+    base = args.output.rstrip("/")
+    return None, None, {
+        f"{name}_rows": write_output(df, args, None, f"{base}/{name}")
+        for name, df in (("vertices", vertices), ("edges", edges))
+    }
+
+
+@_doc_job("graph_analyze")
+def _graph_analyze(spark, table, args):
+    """Graph analytics over an integer (s, t) edge table — the
+    downstream consumer of hostlinks_to_graph's edges output (the
+    reference stops at graph CONSTRUCTION, hostlinks_to_graph.py; this
+    is the analytics tier over it)."""
+    run, undirected, sort_cols = GRAPH_ALGOS[args.graph_algo]
+    edges = table.select("s", "t")
+    if undirected:
+        edges = (
+            edges.select(
+                F.least("s", "t").alias("a"), F.greatest("s", "t").alias("b")
+            )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+    return run(edges, args), sort_cols, {"algo": args.graph_algo}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -790,143 +830,34 @@ def main_with_args(args: argparse.Namespace) -> int:
         release_caches()
 
 
-def _rounds(args: argparse.Namespace, default: int) -> int:
-    """Per-algorithm --graph_rounds default that still honours an
-    explicit 0 (``or default`` would swallow it — the
-    label_propagation rounds=0 identity contract is CLI-reachable
-    only with a None-test; r11 ADVICE)."""
-    return args.graph_rounds if args.graph_rounds is not None else default
-
-
-def _run_graph_analyze(spark, args: argparse.Namespace) -> int:
-    """Graph analytics over an integer (s, t) edge table — the
-    downstream consumer of hostlinks_to_graph's edges output (the
-    reference stops at graph CONSTRUCTION, hostlinks_to_graph.py; this
-    is the analytics tier over it)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    edges = spark.read.parquet(args.input).select("s", "t")
-    algo = args.graph_algo
-    if algo == "pagerank":
-        from cc_pyspark_spark.operators.pagerank import pagerank_fixed  # noqa: PLC0415
-
-        df = pagerank_fixed(edges, n_iter=_rounds(args, 10))
-        sort_cols = ["id"]
-    elif algo == "pagerank_converged":
-        from cc_pyspark_spark.operators.pagerank import (  # noqa: PLC0415
-            pagerank_converged,
-        )
-
-        df = pagerank_converged(edges)
-        sort_cols = ["id"]
-    elif algo == "hits":
-        from cc_pyspark_spark.operators.pagerank import hits_fixed  # noqa: PLC0415
-
-        df = hits_fixed(edges, rounds=_rounds(args, 2))
-        sort_cols = ["id", "kind"]
-    elif algo == "hits_converged":
-        from cc_pyspark_spark.operators.pagerank import (  # noqa: PLC0415
-            hits_converged,
-        )
-
-        df = hits_converged(edges)
-        sort_cols = ["id", "kind"]
-    elif algo == "cc":
-        from cc_pyspark_spark.operators.pagerank import (  # noqa: PLC0415
-            cc_alternating_converged,
-        )
-
-        df = cc_alternating_converged(edges)
-        sort_cols = ["id"]
-    else:
-        canon = (
-            edges.select(
-                F.least("s", "t").alias("a"), F.greatest("s", "t").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        if algo == "lpa":
-            from cc_pyspark_spark.operators.community import (  # noqa: PLC0415
-                label_propagation,
-            )
-
-            df = label_propagation(canon, rounds=_rounds(args, 4))
-            sort_cols = ["id"]
-        elif algo == "lpa_converged":
-            from cc_pyspark_spark.operators.community import (  # noqa: PLC0415
-                lpa_converged,
-            )
-
-            df = lpa_converged(canon)
-            sort_cols = ["id"]
-        elif algo == "kcore":
-            from cc_pyspark_spark.operators.community import (  # noqa: PLC0415
-                kcore_converged,
-            )
-
-            df = kcore_converged(canon, k=args.kcore_k)
-            sort_cols = ["id"]
-        else:  # triangles
-            from cc_pyspark_spark.operators.pagerank import (  # noqa: PLC0415
-                triangle_stats,
-            )
-
-            df = triangle_stats(canon)
-            sort_cols = None
-    write_output(df, args, sort_cols)
-    print(json.dumps({"job": args.job, "algo": algo}))
-    return 0
-
-
 def _dispatch_job(spark, args: argparse.Namespace) -> int:
-    if args.job == "hostlinks_to_graph":
-        # input = (s, t) edge table (parquet), output = <out>/vertices + <out>/edges
-        from cc_pyspark_spark.operators.graph import host_links_to_graph  # noqa: PLC0415
-
-        edges_in = spark.read.parquet(args.input)
-        vertices, int_edges = host_links_to_graph(
-            edges_in,
-            validate_host_names=args.validate_host_names,
-            normalize_host_names=args.normalize_host_names,
+    """Read the input, run the job, write its frame and print the one
+    report line."""
+    metrics = None
+    if args.job in JOBS:
+        pipeline, sort_cols, parse_opts = JOBS[args.job]
+        metrics = WarcMetrics(spark)
+        records = warc_records(
+            spark,
+            args.input,
+            input_base_url=args.input_base_url,
+            num_input_partitions=args.num_input_partitions,
+            metrics=metrics,
+            local_temp_dir=args.local_temp_dir,
+            **parse_opts,
         )
-        base = args.output.rstrip("/")
-        for name, df in (("vertices", vertices), ("edges", int_edges)):
-            out = df.coalesce(args.num_output_partitions)
-            if args.output_format == "text":
-                from cc_pyspark_spark.sources.tables import write_text_gz  # noqa: PLC0415
-
-                write_text_gz(out, f"{base}/{name}")
-            else:
-                out.write.format(args.output_format).option(
-                    "compression", args.output_compression
-                ).mode("overwrite").save(f"{base}/{name}")
-        return 0
-    if args.job == "graph_analyze":
-        return _run_graph_analyze(spark, args)
-    if args.job in DOC_JOBS:
-        return _run_doc_job(spark, args)
-    job_fn, sort_cols, parse_opts = JOBS[args.job]
-    metrics = WarcMetrics(spark)
-    records = warc_records(
-        spark,
-        args.input,
-        input_base_url=args.input_base_url,
-        num_input_partitions=args.num_input_partitions,
-        metrics=metrics,
-        local_temp_dir=args.local_temp_dir,
-        **parse_opts,
-    )
-    df = job_fn(records)
-    # A8 dataflow metrics: accumulators for the parse stage +
-    # df.observe for the output stage, logged after the single action.
-    from pyspark.sql import Observation  # noqa: PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    obs = Observation("job_metrics")
-    df = df.observe(obs, F.count(F.lit(1)).alias("output_rows"))
-    write_output(df, args, sort_cols)
-    print(json.dumps({"job": args.job, **metrics.log(), **obs.get}))
+        df, facts = pipeline(records), {}
+    else:
+        df, sort_cols, facts = DOC_JOBS[args.job](
+            spark, spark.read.parquet(args.input), args
+        )
+    if df is not None:
+        facts["output_rows"] = write_output(df, args, sort_cols)
+    if metrics is not None:
+        # A8 dataflow metrics: the parse stage's accumulators, read
+        # after the write (the job's single action).
+        facts.update(metrics.log())
+    print(json.dumps({"job": args.job, **facts}))
     return 0
 
 

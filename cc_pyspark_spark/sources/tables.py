@@ -85,15 +85,21 @@ def checkpoint_table(
     return spark.read.parquet(path)
 
 
-def write_text_gz(df: DataFrame, path: str, sep: str = "\t") -> None:
-    """K2: gzip text sink for graph vertices/edges
-    (hostlinks_to_graph.py:115-118,162-165)."""
+def _tab_joined(df: DataFrame, sep: str = "\t") -> DataFrame:
+    """The text sinks' row format: one `value` column, the row's columns
+    cast to string and joined by `sep`."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     cols = [F.col(c).cast("string") for c in df.columns]
-    df.select(F.concat_ws(sep, *cols).alias("value")).write.mode(
-        "overwrite"
-    ).option("compression", "gzip").text(path)
+    return df.select(F.concat_ws(sep, *cols).alias("value"))
+
+
+def write_text_gz(df: DataFrame, path: str, sep: str = "\t") -> None:
+    """K2: gzip text sink for graph vertices/edges
+    (hostlinks_to_graph.py:115-118,162-165)."""
+    _tab_joined(df, sep).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).text(path)
 
 
 def write_bucketed_table(

@@ -1039,3 +1039,169 @@ def test_cli_soft_dedup(tmp_path):
     assert all(abs(r["weight"] * r["cluster_size"] - 1.0) < 1e-12 for r in rows)
     assert any(r["cluster_size"] > 1 for r in rows)
     assert any(r["cluster_size"] == 1 and r["weight"] == 1.0 for r in rows)
+
+
+def _last_report(capsys) -> dict:
+    import json as _json
+
+    lines = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
+    return _json.loads(lines[-1])
+
+
+def _host_edges(spark, tmp_path) -> str:
+    path = str(tmp_path / "host_edges")
+    spark.createDataFrame(
+        [("com.a", "com.b"), ("com.b", "com.a"), ("com.a", "com.a")], ["s", "t"]
+    ).write.parquet(path)
+    return path
+
+
+def test_cli_c4_clean(spark, tmp_path, capsys):
+    """End-to-end CLI: documents parquet → one C4 line-rules row per
+    document, and --gate_filter keeps exactly the c4_pass=1 subset; each
+    report line counts the rows written."""
+    from cc_pyspark_spark.jobs.runner import main
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [
+            (1, "The first line is fine.\nPlease enable javascript to continue."),
+            (2, "no terminal punctuation here"),
+            (3, "A good sentence stays.\nvar x = {y};"),
+            (4, "Another fine sentence here!\nAnd a second one too."),
+        ],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    out_all = str(tmp_path / "cleaned")
+    out_kept = str(tmp_path / "kept")
+    common = ["--num_output_partitions", "2", "--output_compression", "snappy"]
+    assert main(["c4_clean", src, out_all, *common]) == 0
+    assert _last_report(capsys) == {
+        "job": "c4_clean", "gate_filter": False, "output_rows": 4,
+    }
+    assert main(["c4_clean", src, out_kept, "--gate_filter", *common]) == 0
+    assert _last_report(capsys) == {
+        "job": "c4_clean", "gate_filter": True, "output_rows": 2,
+    }
+    got = {
+        r["doc_id"]: (r["n_lines"], r["n_kept"], r["cleaned_text"], r["c4_pass"])
+        for r in spark.read.parquet(out_all).collect()
+    }
+    assert got == {
+        1: (2, 1, "The first line is fine.", 1),
+        2: (1, 0, "", 0),
+        3: (2, 1, "A good sentence stays.", 0),
+        4: (2, 2, "Another fine sentence here!\nAnd a second one too.", 1),
+    }
+    kept = spark.read.parquet(out_kept)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 4]
+
+
+def test_cli_graph_analyze_cc_and_triangles(spark, tmp_path, capsys):
+    """graph_analyze --graph_algo cc labels each component with its
+    smallest id; triangles gives one stats row (two K4s joined by a
+    bridge: 8 triangles, 30 wedges); each report line counts the rows
+    written."""
+    from cc_pyspark_spark.jobs.runner import main
+
+    edges = [
+        (0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3),
+        (4, 5), (4, 6), (4, 7), (5, 6), (5, 7), (6, 7),
+        (3, 7), (7, 3), (9, 10), (10, 10),
+    ]
+    edges_path = str(tmp_path / "edges")
+    spark.createDataFrame(edges, "s long, t long").write.parquet(edges_path)
+    common = ["--num_output_partitions", "1", "--spark_master", "local[4]",
+              "--output_compression", "snappy"]
+
+    out = str(tmp_path / "cc")
+    assert main(["graph_analyze", edges_path, out, "--graph_algo", "cc", *common]) == 0
+    got = {r["id"]: r["component"] for r in spark.read.parquet(out).collect()}
+    assert got == {**dict.fromkeys(range(8), 0), 9: 9, 10: 9}
+    assert _last_report(capsys) == {
+        "job": "graph_analyze", "algo": "cc", "output_rows": 10,
+    }
+
+    out = str(tmp_path / "tri")
+    assert main(
+        ["graph_analyze", edges_path, out, "--graph_algo", "triangles", *common]
+    ) == 0
+    (row,) = spark.read.parquet(out).collect()
+    assert (row["n_vertices"], row["n_edges"], row["n_triangles"]) == (10, 14, 8)
+    assert row["n_wedges"] == 30
+    assert abs(row["clustering"] - 0.8) < 1e-12
+    assert _last_report(capsys) == {
+        "job": "graph_analyze", "algo": "triangles", "output_rows": 1,
+    }
+
+
+def test_cli_hostlinks_to_graph_keeps_output_options(spark, tmp_path, capsys):
+    """hostlinks_to_graph writes both outputs through the job writer:
+    --output_option reaches them (a CSV header line) and one report
+    line gives each output's row count."""
+    import glob
+
+    out = str(tmp_path / "graph_csv")
+    rc = runner_main([
+        "hostlinks_to_graph", _host_edges(spark, tmp_path), out,
+        "--num_output_partitions", "1", "--output_format", "csv",
+        "--output_compression", "none", "--output_option", "header=true",
+    ])
+    assert rc == 0
+    assert _last_report(capsys) == {
+        "job": "hostlinks_to_graph", "vertices_rows": 2, "edges_rows": 2,
+    }
+    for name, header in (("vertices", "name,id"), ("edges", "s,t")):
+        (part,) = glob.glob(f"{out}/{name}/part-*.csv")
+        with open(part) as f:
+            assert f.readline().strip() == header
+
+
+def test_cli_hostlinks_to_graph_rejects_save_as_table(spark, tmp_path):
+    """The job has two outputs, so one table name cannot hold them:
+    it exits before writing anything."""
+    edges = _host_edges(spark, tmp_path)
+    table = str(tmp_path / "graph_tbl")
+    with _pytest.raises(SystemExit, match="save_as_table"):
+        runner_main(["hostlinks_to_graph", edges, table, "--save_as_table"])
+    assert not (tmp_path / "graph_tbl").exists()
+
+
+def test_cli_text_output_is_tab_joined(spark, tmp_path):
+    """--output_format text writes any job's rows as tab-joined lines
+    (the write_text_gz rule), not only hostlinks_to_graph's."""
+    import glob
+
+    edges_path = str(tmp_path / "edges")
+    spark.createDataFrame([(1, 2), (3, 4)], "s long, t long").write.parquet(edges_path)
+    out = str(tmp_path / "cc_text")
+    rc = runner_main([
+        "graph_analyze", edges_path, out, "--graph_algo", "cc",
+        "--num_output_partitions", "1", "--output_format", "text",
+        "--output_compression", "none",
+    ])
+    assert rc == 0
+    lines = set()
+    for part in glob.glob(f"{out}/part-*"):
+        with open(part) as f:
+            lines |= set(f.read().splitlines())
+    assert lines == {"1\t1", "2\t1", "3\t3", "4\t3"}
+
+
+@_pytest.mark.parametrize(
+    "flag",
+    ["--coreset_k", "--pack_capacity", "--kmv_k", "--sample_k", "--cap_k",
+     "--mix_budget"],
+)
+def test_cli_count_flags_reject_zero(monkeypatch, capsys, flag):
+    """A count flag of 0 is an argument error, raised before any
+    session is built (not a silent fallback to the default)."""
+    from cc_pyspark_spark.jobs import runner
+
+    def no_session(*a, **k):
+        raise AssertionError("session built before the flag was checked")
+
+    monkeypatch.setattr(runner, "build_session", no_session)
+    with _pytest.raises(SystemExit):
+        runner.main(["dedup_documents", "in", "out", flag, "0"])
+    assert flag in capsys.readouterr().err

@@ -162,6 +162,19 @@ def test_zorder_table_cli_roundtrip(spark, tmp_path):
     assert sum(spans) / len(spans) <= full / 2, sorted(spans)
 
 
+def test_zorder_table_rejects_empty_column_list(spark, tmp_path):
+    """`--zorder_cols ","` parses to no columns: an error naming the
+    flag, not a ZeroDivisionError from the bit split."""
+    import pytest
+
+    from cc_pyspark_spark.jobs.runner import main as runner_main
+
+    src = str(tmp_path / "src")
+    spark.range(0, 10).selectExpr("id AS a").write.parquet(src)
+    with pytest.raises(SystemExit, match="--zorder_cols"):
+        runner_main(["zorder_table", src, str(tmp_path / "out"), "--zorder_cols", ","])
+
+
 def test_zorder_key_decode_roundtrip_property(spark):
     """Encode/decode are mutually inverse on random tuples — the key
     loses no information (hypothesis-driven)."""
