@@ -21,6 +21,7 @@ from __future__ import annotations
 import argparse
 import importlib
 import json
+import os
 import re
 import sys
 
@@ -143,8 +144,8 @@ def build_parser() -> argparse.ArgumentParser:
                    "dedup_documents/export_training_jsonl: parquet "
                    "documents — or embeddings — table)")
     p.add_argument("output", help="output path (or table name with --save_as_table)")
-    p.add_argument("--num_input_partitions", type=int, default=400)
-    p.add_argument("--num_output_partitions", type=int, default=10)
+    p.add_argument("--num_input_partitions", type=_positive_int, default=400)
+    p.add_argument("--num_output_partitions", type=_positive_int, default=10)
     p.add_argument("--input_base_url", default=None)
     p.add_argument("--validate_host_names", action="store_true")
     p.add_argument("--normalize_host_names", action="store_true")
@@ -815,7 +816,20 @@ def main(argv: list[str] | None = None) -> int:
     return main_with_args(args)
 
 
+def _local_path(path: str) -> str:
+    """``path`` made absolute against Python's current directory unless
+    it has a URI scheme: Hadoop resolves a relative path against the
+    directory the JVM started in, which a long-lived session keeps
+    after Python changes directory."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        return path
+    return os.path.abspath(path)
+
+
 def main_with_args(args: argparse.Namespace) -> int:
+    args.input = _local_path(args.input)
+    if not args.save_as_table:  # otherwise a table name
+        args.output = _local_path(args.output)
     spark = build_session(app_name=f"cc-pyspark-spark:{args.job}", master=args.spark_master)
     spark.sparkContext.setLogLevel(args.log_level)
     try:

@@ -1,9 +1,12 @@
-"""One mechanism for the iterative graph operators
-(operators/pagerank.py, operators/community.py): a shuffle scope, a
-round driver, and an input lineage cut.
+"""One mechanism for the engine's iterative loops: a shuffle scope, a
+round driver, and an input lineage cut. The round driver runs the graph
+operators (operators/pagerank.py, operators/community.py) and the
+plan-level loops that cut their state: k-center
+(``plans/similarity.kcenter_coreset_frame``) and the sparse classifier
+trainer (``plans/text.classifier_train_sparse_frame``).
 
-Scope -- :func:`loop_shuffle`. Each operator wraps its setup caches and
-its loop in this context manager. Inside it
+Scope -- :func:`loop_shuffle`. Each graph operator wraps its setup
+caches and its loop in this context manager. Inside it
 ``spark.sql.shuffle.partitions`` is derived from the measured row count
 of the loop frame (~LOOP_TARGET_BYTES of fixed-width row data per
 partition, floor 1, capped at the session's configured count, so a
@@ -52,6 +55,18 @@ and raises ``RuntimeError`` when the guard runs out instead of
 returning a state that has not settled. Results are bit-identical
 under any cadence and partition count: every loop state is integer or
 fixed-point, and its aggregates are associative.
+
+The loop state is cut only here. A step may cut a side frame that its
+own round reads twice (hits_converged's auth frame, lazily; the sparse
+trainer's gradient table, eagerly), but it cuts no state of its own.
+Two loops stay written out:
+
+* ``hits_fixed``: its lazy cuts, with no action of its own, measured
+  faster than the eager cuts ``iterate`` makes when there is no probe
+  (OPTIMIZATION_r15.md §10: graph_hits 1.91 -> 1.63/1.80 s);
+* ``text_bpe_train``: its loop state (the vocab) is persisted, not cut,
+  so it can be recomputed after eviction; its per-round cut is the
+  1-row argmax side frame.
 
 Lineage -- :func:`truncate_lineage` cuts a large caller lineage off an
 edge input before an operator derives several frames from it.

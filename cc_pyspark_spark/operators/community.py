@@ -33,7 +33,6 @@ Scale shapes (100 TB / 10^9-vertex web graph):
 
 from __future__ import annotations
 
-from contextlib import nullcontext
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -122,49 +121,41 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .distinct()
             .select("id", F.col("id").alias("community"))
         )
-    return label_propagation_history(edges, rounds)[-1]
+    # no action of its own, so no loop_shuffle scope
+    # (operators/adaptive.py); cut every 4 rounds but never the last,
+    # which the caller's action materializes
+    lab, step = _lpa_setup(edges.persist().transform(track_cache))
+    lab = iterate(step, lab, rounds - 1, every=4)
+    return step(lab).select("id", F.col("lab").alias("community"))
 
 
-def label_propagation_history(
-    edges: DataFrame, rounds: int, checkpoint_each: bool = False
-) -> list[DataFrame]:
+def label_propagation_history(edges: DataFrame, rounds: int) -> list[DataFrame]:
     """Per-round label frames of :func:`label_propagation` (element r-1
     is the round-r partition) — exposed so partition-quality metrics
     (graph_modularity's Q-vs-round curve) can evaluate every sweep
     without re-running the propagation.
 
     Each round adds one join + two aggregations on top of the previous
-    label frame, so plan depth grows linearly with rounds; the label
-    frame is truncated every 4 rounds except the last (the caller's
-    action materialises that one). Callers that consume EVERY round's
-    frame (each metric reads a frame several times) pass
-    ``checkpoint_each=True``: every round is then eagerly materialized
-    once, so downstream multi-reference cost is O(rounds), not
-    multiplicative lineage replay (the modularity bench row read 29 s
-    before this, 3^rounds replays of round 1).
-
-    Only the ``checkpoint_each`` path takes a loop_shuffle scope: the
-    plain path runs no action of its own, so its plan executes at the
-    caller's action after a scope is restored (operators/adaptive.py).
-    The loop is written out rather than run by ``iterate``: it keeps
-    every round's frame, and the plain path leaves its last round
-    without a checkpoint.
+    label frame, and a consumer reads every frame several times, so
+    every round is eagerly materialized once: downstream
+    multi-reference cost is O(rounds), not multiplicative lineage
+    replay (the modularity bench row read 29 s before this, 3^rounds
+    replays of round 1). The loop runs actions of its own, so it takes
+    a loop_shuffle scope.
     """
     e = edges.persist().transform(track_cache)
-    scope = (
-        loop_shuffle(e.sparkSession, e.count(), n_cols=2)
-        if checkpoint_each
-        else nullcontext()
-    )
-    with scope:
+    with loop_shuffle(e.sparkSession, e.count(), n_cols=2):
         lab, step = _lpa_setup(e)
-        history: list[DataFrame] = []
-        for i in range(1, rounds + 1):
-            lab = step(lab)
-            if checkpoint_each or (i % 4 == 0 and i < rounds):
-                lab = lab.localCheckpoint(eager=True)
-            history.append(lab.select("id", F.col("lab").alias("community")))
-        return history
+        seen: list[DataFrame] = []  # each round's input: round 0, cut 1..
+
+        def record(lab: DataFrame) -> DataFrame:
+            seen.append(lab)
+            return step(lab)
+
+        seen.append(iterate(record, lab, rounds))
+        return [
+            f.select("id", F.col("lab").alias("community")) for f in seen[1:]
+        ]
 
 
 def _label_mismatches(a: DataFrame, *others: DataFrame) -> "list[int]":

@@ -609,20 +609,6 @@ def _hits_spread(e: DataFrame, frame: DataFrame, src: str, dst: str) -> DataFram
     )
 
 
-def _hits_round(
-    e_s: DataFrame, e_t: DataFrame, hub: DataFrame,
-    post: Callable[[DataFrame], DataFrame],
-) -> "tuple[DataFrame, DataFrame]":
-    """One HITS round shared by :func:`hits_fixed` and
-    :func:`hits_converged`: auth from hub over in-edges, then hub from
-    auth over out-edges. ``post`` (a lazy checkpoint, or the fixed-point
-    rescale ending in one) runs on each half, so the hub half reads a
-    truncated auth frame; the round therefore truncates twice and is
-    run by a plain loop rather than ``iterate``."""
-    auth = post(_hits_spread(e_s, hub, "s", "t"))
-    return auth, post(_hits_spread(e_t, auth, "t", "s"))
-
-
 def _hits_layouts(base: DataFrame) -> "tuple[DataFrame, DataFrame]":
     """The edge frame cached twice, pre-partitioned on each join key
     (the rounds alternate join sides), so every per-round join reuses a
@@ -685,9 +671,8 @@ def hits_fixed(edges: DataFrame, rounds: int = 2) -> DataFrame:
     )
     hub = _hits_spread(e_t, auth, "t", "s")
     for _ in range(rounds - 1):
-        auth, hub = _hits_round(
-            e_s, e_t, hub, lambda f: f.localCheckpoint(eager=False)
-        )
+        auth = _hits_spread(e_s, hub, "s", "t").localCheckpoint(eager=False)
+        hub = _hits_spread(e_t, auth, "t", "s").localCheckpoint(eager=False)
 
     def by_max(frame: DataFrame) -> "tuple[DataFrame, Column]":
         mx = frame.agg(F.max("v").alias("mx"))
@@ -726,8 +711,7 @@ def hits_converged(
     Returns (id, kind, score_fp, score) like hits_fixed: score_fp is
     the fixed-point integer (max = 2^scale_bits by construction),
     score = score_fp / 2^scale_bits, bit-deterministic across
-    partitionings. The round truncates twice (once per half), so this
-    loop is written out rather than run by ``iterate``.
+    partitionings.
     """
     scale = 1 << scale_bits
     # persisted so the loop's partition count can come from a measured
@@ -738,49 +722,52 @@ def hits_converged(
 
         def rescale(frame: DataFrame) -> DataFrame:
             mx = frame.agg(F.max("v").alias("m"))
-            return (
-                frame.crossJoin(F.broadcast(mx))
-                .select(
-                    "id",
-                    F.expr(
-                        f"(v DIV m) * {scale}L + ((v % m) * {scale}L) DIV m"
-                    ).alias("v"),
+            return frame.crossJoin(F.broadcast(mx)).select(
+                "id",
+                F.expr(
+                    f"(v DIV m) * {scale}L + ((v % m) * {scale}L) DIV m"
+                ).alias("v"),
+            )
+
+        def deltas(x: DataFrame, px: DataFrame) -> DataFrame:
+            return x.join(
+                px.select(F.col("id").alias("id2"), F.col("v").alias("v2")),
+                x.id == F.col("id2"),
+            ).select(F.abs(F.col("v") - F.col("v2")).alias("d"))
+
+        auth = prev_auth = None
+
+        def step(hub: DataFrame) -> DataFrame:
+            nonlocal auth
+            # a side cut: the hub half and the probe both read auth (an
+            # uncut one re-runs the auth rescale's broadcast jobs inside
+            # the hub half); lazy, as the round's probe materializes it
+            auth = rescale(_hits_spread(e_s, hub, "s", "t")).localCheckpoint(
+                eager=False
+            )
+            return rescale(_hits_spread(e_t, auth, "t", "s"))
+
+        def settled(hub: DataFrame, prev: DataFrame) -> "DataFrame | None":
+            """max(L-inf(auth delta), L-inf(hub delta)) <= 1, in one
+            action, from round 2 on."""
+            nonlocal prev_auth
+            if prev_auth is not None:
+                row = (
+                    deltas(auth, prev_auth)
+                    .unionAll(deltas(hub, prev))
+                    .agg(F.max("d").alias("d"))
+                    .collect()[0]
                 )
-                # lazy: the round's probe action materializes it
-                .localCheckpoint(eager=False)
-            )
-
-        def linf2(
-            a: DataFrame, pa: DataFrame, h: DataFrame, ph: DataFrame
-        ) -> int:
-            """max(L-inf(auth delta), L-inf(hub delta)) in one action."""
-
-            def deltas(x: DataFrame, px: DataFrame) -> DataFrame:
-                return x.join(
-                    px.select(
-                        F.col("id").alias("id2"), F.col("v").alias("v2")
-                    ),
-                    x.id == F.col("id2"),
-                ).select(F.abs(F.col("v") - F.col("v2")).alias("d"))
-
-            row = (
-                deltas(a, pa)
-                .unionAll(deltas(h, ph))
-                .agg(F.max("d").alias("d"))
-                .collect()[0]
-            )
-            return int(row["d"]) if row["d"] is not None else 0
+                if (row["d"] or 0) <= 1:
+                    return _hits_scores(
+                        auth, hub, lambda f: (f, F.lit(float(scale)))
+                    )
+            prev_auth = auth
+            return None
 
         verts_s = e_s.select(F.col("s").alias("id")).distinct()
         hub = verts_s.select("id", F.lit(scale).cast("bigint").alias("v"))
-        prev = None
-        for _ in range(max_rounds):
-            auth, nxt = _hits_round(e_s, e_t, hub, rescale)
-            if prev is not None and linf2(auth, prev[0], nxt, prev[1]) <= 1:
-                return _hits_scores(
-                    auth, nxt, lambda f: (f, F.lit(float(scale)))
-                )
-            prev, hub = (auth, nxt), nxt
-    raise RuntimeError(
-        f"hits_converged: no integer fixed point within {max_rounds} rounds"
-    )
+        return iterate(
+            step, hub, max_rounds, stop=settled,
+            guard="hits_converged: no integer fixed point",
+        )

@@ -655,9 +655,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(track_cache)
     )
 
-    history = label_propagation_history(
-        edges, rounds=_MODULARITY_ROUNDS, checkpoint_each=True
-    )
+    history = label_propagation_history(edges, rounds=_MODULARITY_ROUNDS)
     md = F.col("m").cast("double")
     dt = F.col("d_tot").cast("double")
     out = None

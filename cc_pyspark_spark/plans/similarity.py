@@ -15,12 +15,15 @@ rounding fudge.
 
 from __future__ import annotations
 
+import itertools
+
 from cc_pyspark_spark.caching import track_cache
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from cc_pyspark_spark.catalog import Catalog
+from cc_pyspark_spark.operators.adaptive import iterate
 from cc_pyspark_spark.plans.registry import register
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -1672,17 +1675,13 @@ def embedding_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcenter_coreset_frame(t.embeddings)
 
 
-def kcenter_coreset_frame(
-    emb: DataFrame,
-    k: int = KCENTER_K,
-    checkpoint_every: int = 8,
-) -> DataFrame:
+def kcenter_coreset_frame(emb: DataFrame, k: int = KCENTER_K) -> DataFrame:
     """(vec_id, center_id, d) k-center assignment over any embeddings
     frame — the registered query's compute, exposed for the
     `coreset_select` CLI job. For k beyond the oracle-sized default
-    the center frame's lineage is truncated every `checkpoint_every`
-    rounds (it is referenced by every later round; untruncated, plan
-    depth grows linearly and planning cost quadratically in k)."""
+    the center frame's lineage is cut every 8 rounds (it is referenced
+    by every later round; uncut, plan depth grows linearly and
+    planning cost quadratically in k)."""
     pts = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
@@ -1690,7 +1689,9 @@ def kcenter_coreset_frame(
     centers = pts.orderBy("vec_id").limit(1).select(
         F.lit(0).cast("bigint").alias("rnk"), "vec_id", "v"
     )
-    for r in range(1, k):
+    rnk = itertools.count(1)
+
+    def step(centers: DataFrame) -> DataFrame:
         paired = pts.alias("p").crossJoin(
             F.broadcast(centers.alias("c"))
         ).select(
@@ -1702,11 +1703,11 @@ def kcenter_coreset_frame(
             dmin.join(pts, "vec_id")
             .orderBy(F.desc("dmin"), F.asc("vec_id"))
             .limit(1)
-            .select(F.lit(r).cast("bigint").alias("rnk"), "vec_id", "v")
+            .select(F.lit(next(rnk)).cast("bigint").alias("rnk"), "vec_id", "v")
         )
-        centers = centers.unionAll(nxt)
-        if r % checkpoint_every == 0:
-            centers = centers.localCheckpoint(eager=True)
+        return centers.unionAll(nxt)
+
+    centers = iterate(step, centers, k - 1, every=8)
     a = pts.alias("p").crossJoin(F.broadcast(centers.alias("c"))).select(
         F.col("p.vec_id").alias("vec_id"),
         F.col("c.vec_id").alias("center_id"),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from cc_pyspark_spark.catalog import Catalog
 from cc_pyspark_spark.functions.text import TOKEN_PATTERN, shingles, tokenize
+from cc_pyspark_spark.operators.adaptive import iterate
 from cc_pyspark_spark.plans.registry import register
 
 #: Deterministic language-marker sets (heuristic n-gram-style language
@@ -2644,10 +2645,7 @@ def classifier_train_sparse_frame(
     # dense-array scatter — per round. It is round-invariant.
     ).localCheckpoint(eager=True)
 
-    w_row = spark.range(1).select(
-        F.expr(f"transform(sequence(0, {d}), b -> 0.0D)").alias("ws")
-    )
-    for _ in range(CLS_TRAIN_ROUNDS):
+    def step(w_row: DataFrame) -> DataFrame:
         woff = w_row.crossJoin(F.broadcast(mom_row)).select(
             "ws",
             "sda",
@@ -2748,7 +2746,7 @@ def classifier_train_sparse_frame(
                 )
             ).alias("gm")
         )
-        w_row = (
+        return (
             w_row.crossJoin(F.broadcast(grad_row))
             .crossJoin(F.broadcast(err_sum))
             .select(
@@ -2760,20 +2758,22 @@ def classifier_train_sparse_frame(
                     " / (1e12D * ndd)) END)"
                 ).alias("ws")
             )
-            # Truncate the weight row's lineage EVERY round (r16
-            # optimization round, guide §1.2 per-task work): without
-            # this the 1-row frame chains one more nested
-            # transform(sequence(0, d)) layer per round, so every
-            # round's gradient plan has a DIFFERENT codegen source and
-            # pays a fresh janino compilation of a d-wide generated
-            # class — measured as a flat ~0.55 s per-round floor at
-            # sf0.1 that did not move with data partitioning (1 vs 32
-            # partitions), while re-running an identical plan shape
-            # cost ~0.1 s. With the checkpoint, every round's plan is
-            # shape-identical and codegen compiles once. The frame is
-            # one row; the checkpoint job is ~ms.
-            .localCheckpoint(eager=True)
         )
+
+    w_row = spark.range(1).select(
+        F.expr(f"transform(sequence(0, {d}), b -> 0.0D)").alias("ws")
+    )
+    # iterate cuts the weight row eagerly EVERY round (r16 optimization
+    # round, guide §1.2 per-task work): without the cut the 1-row frame
+    # chains one more nested transform(sequence(0, d)) layer per round,
+    # so every round's gradient plan has a DIFFERENT codegen source and
+    # pays a fresh janino compilation of a d-wide generated class —
+    # measured as a flat ~0.55 s per-round floor at sf0.1 that did not
+    # move with data partitioning (1 vs 32 partitions), while re-running
+    # an identical plan shape cost ~0.1 s. With the cut, every round's
+    # plan is shape-identical and codegen compiles once. The frame is
+    # one row; the checkpoint job is ~ms.
+    w_row = iterate(step, w_row, CLS_TRAIN_ROUNDS)
 
     bias = w_row.select(
         F.lit(d).cast("bigint").alias("feature_idx"),

@@ -6,6 +6,9 @@ to the derived count (the loops are integer-state algorithms)."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -188,3 +191,49 @@ def test_iterate_checkpoint_schedule_probes_and_guard():
         return "result" if new[0].n == 3 else None
 
     assert iterate(step, (_Frame(0),), 9, stop=at_three) == "result"
+
+
+#: Loops outside adaptive.py allowed to cut inside a written-out round
+#: loop, each with the reason ``iterate`` does not run it.
+_WRITTEN_OUT = {
+    "operators/pagerank.py:hits_fixed": (
+        "lazy cuts with no action of its own measured faster than the "
+        "eager cuts iterate makes when there is no probe"
+    ),
+    "plans/text.py:text_bpe_train": (
+        "its loop state (the vocab) is persisted, not cut, so it can be "
+        "recomputed after eviction; the cut is the 1-row argmax side frame"
+    ),
+}
+
+
+def _cuts_in_loops() -> "set[str]":
+    """``file:top-level function`` of every ``localCheckpoint`` call
+    lexically inside a for/while body in the engine, adaptive.py aside."""
+    root = Path(adaptive.__file__).parents[1]
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/adaptive.py":
+            continue
+        for top in ast.parse(path.read_text()).body:
+            for loop in ast.walk(top):
+                if not isinstance(loop, (ast.For, ast.While)):
+                    continue
+                if any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "localCheckpoint"
+                    for stmt in loop.body + loop.orelse
+                    for n in ast.walk(stmt)
+                ):
+                    found.add(f"{rel}:{getattr(top, 'name', '<module>')}")
+    return found
+
+
+def test_round_loops_cut_only_through_iterate():
+    """One layout rule: a loop's cadence of cuts lives in ``iterate``.
+    A step may cut a side frame its own round reads twice, but no
+    written-out loop outside adaptive.py cuts, apart from the listed
+    ones."""
+    assert _cuts_in_loops() == set(_WRITTEN_OUT)

@@ -1167,6 +1167,24 @@ def test_cli_hostlinks_to_graph_rejects_save_as_table(spark, tmp_path):
     assert not (tmp_path / "graph_tbl").exists()
 
 
+def test_cli_relative_paths_follow_python_cwd(spark, tmp_path, monkeypatch):
+    """Relative input and output paths resolve against Python's current
+    directory, not the one the session's JVM started in."""
+    spark.createDataFrame([(1, 2), (3, 4)], "s long, t long").write.parquet(
+        str(tmp_path / "edges")
+    )
+    monkeypatch.chdir(tmp_path)
+    rc = runner_main([
+        "graph_analyze", "edges", "cc_out", "--graph_algo", "cc",
+        "--num_output_partitions", "1",
+    ])
+    assert rc == 0
+    rows = spark.read.parquet(str(tmp_path / "cc_out")).collect()
+    assert sorted((r.id, r.component) for r in rows) == [
+        (1, 1), (2, 1), (3, 3), (4, 3)
+    ]
+
+
 def test_cli_text_output_is_tab_joined(spark, tmp_path):
     """--output_format text writes any job's rows as tab-joined lines
     (the write_text_gz rule), not only hostlinks_to_graph's."""
@@ -1191,7 +1209,7 @@ def test_cli_text_output_is_tab_joined(spark, tmp_path):
 @_pytest.mark.parametrize(
     "flag",
     ["--coreset_k", "--pack_capacity", "--kmv_k", "--sample_k", "--cap_k",
-     "--mix_budget"],
+     "--mix_budget", "--num_input_partitions", "--num_output_partitions"],
 )
 def test_cli_count_flags_reject_zero(monkeypatch, capsys, flag):
     """A count flag of 0 is an argument error, raised before any

@@ -1,12 +1,11 @@
-"""Spark job counts of the iterative graph operators on a small graph.
+"""Spark job counts of the iterative operators on small inputs.
 
 The loops run through one round driver (operators/adaptive.py
 ``iterate``) whose checkpoint rule decides how many jobs a run
 launches: an eager ``localCheckpoint`` is a job of its own, a lazy
 one is materialised by the probe action that follows it. A wrong
 kind or cadence leaves every result unchanged and shows only here.
-The counts cover building the operator's frame and collecting it;
-the written-out HITS and LPA-history loops are pinned alongside.
+The counts cover building the operator's frame and collecting it.
 """
 
 from __future__ import annotations
@@ -30,6 +29,10 @@ from cc_pyspark_spark.operators.pagerank import (
     pagerank_converged,
     pagerank_fixed,
 )
+from cc_pyspark_spark.plans.similarity import kcenter_coreset_frame
+from cc_pyspark_spark.plans.text import classifier_train_sparse_frame
+
+SF_DIR = "/root/testdata/sf0.001"
 
 #: Directed edges: a 3-cycle fed by two leaves, a path whose end (8)
 #: has no out-edge (the dangling path of pagerank_fixed), a back-edge.
@@ -64,14 +67,26 @@ def _ab(spark):
     return spark.createDataFrame(_AB, "a long, b long")
 
 
-def _history(spark, checkpoint_each):
-    frames = label_propagation_history(
-        _ab(spark), 3, checkpoint_each=checkpoint_each
-    )
+def _history(spark):
+    frames = label_propagation_history(_ab(spark), 3)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionAll(f)
     return out
+
+
+def _docs(spark):
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "def main(): return 0 if x else 1",
+        "spark plans every round of an iterative loop again",
+        "a b c d e f g a b c",
+        "import os; print(os.getcwd())",
+        "label propagation settles in a few rounds on small graphs",
+    ]
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
 
 
 #: name -> (frame builder, jobs launched at build + collect)
@@ -99,10 +114,24 @@ CASES = {
     "hits_fixed": (lambda s: hits_fixed(_st(s), rounds=3), 3),
     "hits_converged": (lambda s: hits_converged(_star(s)), 58),
     "label_propagation": (lambda s: label_propagation(_ab(s), rounds=6), 4),
-    "label_propagation_history": (lambda s: _history(s, True), 8),
+    # round 4 is cut; the last round (8) is left to the collect
+    "label_propagation_rounds_8": (
+        lambda s: label_propagation(_ab(s), rounds=8), 4
+    ),
+    "label_propagation_history": (lambda s: _history(s), 8),
     "lpa_converged": (lambda s: lpa_converged(_ab(s)), 17),
     "kcore": (lambda s: kcore(_ab(s), k=2, rounds=4), 6),
     "kcore_converged": (lambda s: kcore_converged(_ab(s), k=2), 7),
+    # 9 rounds: the center frame is cut at round 8
+    "kcenter_coreset": (
+        lambda s: kcenter_coreset_frame(
+            s.read.parquet(f"{SF_DIR}/embeddings.parquet"), k=10
+        ),
+        15,
+    ),
+    "classifier_train_sparse": (
+        lambda s: classifier_train_sparse_frame(s, _docs(s)), 28
+    ),
 }
 
 
